@@ -335,7 +335,9 @@ def approx_distinct_users(events: DataFrame) -> DataFrame:
         # groups; 0.01 keeps the estimate inside the 5% bound with a
         # still-tiny sketch
         F.approx_count_distinct("user_id", rsd=0.01).alias("approx_users"),
-        F.count(F.lit(1)).alias("exact_users"),
+        # count(user_id), not count(*): the NULL user the distinct keeps
+        # is no user, as in the oracle's COUNT(DISTINCT user_id)
+        F.count("user_id").alias("exact_users"),
     ).withColumn(
         "approx_ok",
         F.abs(F.col("approx_users") - F.col("exact_users")) * 100

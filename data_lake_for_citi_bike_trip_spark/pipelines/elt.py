@@ -262,10 +262,15 @@ def run_elt(
 
 def reference_checks(spark: SparkSession, output_root: str) -> list:
     """The reference's 7 DQ assertions (spark_check_emr.py:63-85): fact id
-    never NULL + all tables non-empty, evaluated over the written parquet."""
-    fact = spark.read.parquet(os.path.join(output_root, "bikeshare_fact_table"))
-    check_list = [checks.no_nulls("fact_id_is_null", fact, "id")]
-    for name in schemas.OUTPUT_LAYOUT:
-        df = spark.read.parquet(os.path.join(output_root, name))
+    never NULL + all tables non-empty, evaluated over the written parquet.
+    Each table is read once; the two fact checks share one pass."""
+    tables = {
+        name: spark.read.parquet(os.path.join(output_root, name))
+        for name in schemas.OUTPUT_LAYOUT
+    }
+    check_list = [
+        checks.no_nulls("fact_id_is_null", tables["bikeshare_fact_table"], "id")
+    ]
+    for name, df in tables.items():
         check_list.append(checks.not_empty(f"{name}_is_empty", df))
     return checks.run_checks(check_list)

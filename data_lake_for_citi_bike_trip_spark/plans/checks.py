@@ -3,9 +3,9 @@
 The reference's ``table_validate`` (spark_check_emr.py:20-47) reads a
 table, runs a scalar SQL check, and compares the result with a Python
 comparison operator, raising on failure. We keep that declarative shape
-but make the check list a first-class value and evaluate all checks in
-one Spark job where possible (a union of scalar aggregates is one pass
-per table instead of N actions).
+but make the check list a first-class value and evaluate the checks
+over one DataFrame as one aggregate: one pass per table instead of one
+action per check.
 """
 
 from __future__ import annotations
@@ -39,13 +39,23 @@ def no_nulls(name: str, df: DataFrame, column: str) -> Check:
 
 
 def run_checks(checks: list[Check]) -> list[tuple[str, object, bool]]:
-    """Evaluate each check; returns (name, actual, passed). Raises
-    ValueError listing every failure (mirrors spark_check_emr.py:41-47
-    but reports all failures at once)."""
-    results = []
-    for c in checks:
-        actual = c.df.agg(c.agg.alias("v")).collect()[0]["v"]
-        results.append((c.name, actual, bool(c.comparison(actual, c.expected))))
+    """Evaluate each check; returns (name, actual, passed) in check order.
+    Checks over the same DataFrame object share one ``agg``: one action
+    per DataFrame, not per check. Raises ValueError listing every failure
+    (mirrors spark_check_emr.py:41-47 but reports all failures at once)."""
+    by_df: dict[int, list[int]] = {}
+    for i, c in enumerate(checks):
+        by_df.setdefault(id(c.df), []).append(i)
+    actual: dict[int, object] = {}
+    for idx in by_df.values():
+        row = checks[idx[0]].df.agg(
+            *[checks[i].agg.alias(f"v{i}") for i in idx]
+        ).collect()[0]
+        actual.update((i, row[f"v{i}"]) for i in idx)
+    results = [
+        (c.name, actual[i], bool(c.comparison(actual[i], c.expected)))
+        for i, c in enumerate(checks)
+    ]
     failures = [r for r in results if not r[2]]
     if failures:
         raise ValueError(f"data-quality check failures: {failures}")

@@ -16,6 +16,23 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: Tungsten memory page size. Every ``BytesToBytesMap`` allocates at
+#: least one whole page, whatever its data size: the broadcast
+#: ``UnsafeHashedRelation`` behind a string-keyed broadcast join (held in
+#: storage memory until the broadcast is released), the
+#: ``UnsafeFixedWidthAggregationMap`` of a hash aggregate and the
+#: ``UnsafeExternalSorter`` of a sort. Spark's default derives the page
+#: from heap / cores, capped at 64 MB: with this engine's 16g heap that is
+#: 64 MB at 4 cores and 32 MB at 32, so a 100-row dim pinned 64 MB and
+#: memory use depended on the core count. Dims and per-task maps here are
+#: small; a record larger than a page gets a dedicated page, so the size
+#: changes memory only, never results. 1, 2 and 4 MB sat at the same floor
+#: of a {1, 2, 4, 8, 16, 64} MB sweep (CHANGES.md); 4 MB is the largest of
+#: them, because a task addresses at most 8192 pages (32 GB at 4 MB).
+#: Construction-time only: ``MemoryManager`` reads it when ``SparkEnv``
+#: is built.
+PAGE_SIZE = "4m"
+
 #: Runtime-settable confs applied to every session we touch.
 RUNTIME_CONF: dict[str, str] = {
     # J2's hour-bucket epoch key must be timezone-stable (SURVEY.md §4).
@@ -141,7 +158,11 @@ def ensure_active(spark: SparkSession) -> SparkSession:
 
 
 def configure_runtime(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to an existing session (idempotent)."""
+    """Apply runtime confs to an existing session (idempotent).
+
+    Construction-time confs (``PAGE_SIZE``, driver memory) cannot be
+    applied here: a session the driver hands us keeps its own page size,
+    Spark's heap-derived default unless its builder set one."""
     for key, value in RUNTIME_CONF.items():
         try:
             spark.conf.set(key, value)
@@ -184,12 +205,14 @@ def get_session(
     # local[N] runs executors inside the driver JVM: the driver heap IS
     # the executor heap. 8g across 32 task threads left explode-heavy
     # stages GC-bound (bench showed 2-4x run-to-run variance on the
-    # tokenize/shingle queries); 16g keeps full-parallelism shuffles
-    # comfortably in-heap on the 128 GiB box while remaining a fraction
-    # of what a per-executor heap would be on a real cluster.
+    # tokenize/shingle queries). 16g is a ceiling, not a reservation: the
+    # JVM commits heap as it grows, so on a 15 GiB host the working set
+    # (not -Xmx) is what must fit, and pages sized to the data
+    # (PAGE_SIZE) keep it small.
     builder = builder.config(
         "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g")
     )
+    builder = builder.config("spark.buffer.pageSize", PAGE_SIZE)
     spark = builder.getOrCreate()
     # Register the engine's Python data sources up front so every session
     # we hand out can read/write them without a per-query register call

@@ -15,6 +15,21 @@ def test_approx_distinct_error_bounded(spark, sf_dir):
         assert rel_err <= 0.05, (r.day, r.approx_users, r.exact_users)
 
 
+def test_approx_distinct_users_ignores_null_user(spark):
+    """A NULL user_id is not a user: exact_users matches the oracle's
+    COUNT(DISTINCT user_id), and the sketch (which skips NULLs too)
+    stays inside its bound."""
+    events = _typed_events(
+        spark,
+        [("view", 1.0, 7, 1), ("view", 1.0, 7, 1), ("buy", 2.0, 8, 1),
+         ("view", 1.0, None, 1)],
+    )
+    rows = analytics.approx_distinct_users(events).collect()
+    assert [(r.day, r.exact_users, r.approx_users, r.approx_ok) for r in rows] == [
+        ("2024-01-01", 2, 2, True)
+    ]
+
+
 def test_hll_incremental_rollup_matches_direct_sketch(spark, sf_dir):
     """The union of per-hour sketches must estimate the same as one
     direct per-day sketch (mergeability — the property the incremental

@@ -174,3 +174,39 @@ def test_order_reconciliation_bands(spark):
            for r in setops.order_total_reconciliation(orders, li).collect()}
     assert got == {"exact": 1, "within_1pct": 1, "divergent": 1,
                    "no_lines": 1}
+
+
+def _jobs_in_group(spark, group, thunk):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = thunk()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_run_checks_folds_checks_on_one_dataframe_into_one_job(spark, sf_dir):
+    """Two checks over one DataFrame are one aggregate: the same jobs in
+    the caller's job group as one check alone (under AQE one aggregate
+    action is its shuffle map-stage job plus the result job), and the
+    same (name, actual, passed) tuples as evaluating each check by
+    itself."""
+    events = load_table(spark, sf_dir, "events")
+    pair = [
+        checks.not_empty("events_not_empty", events),
+        checks.no_nulls("event_id_not_null", events, "event_id"),
+    ]
+    want = []
+    for c in pair:
+        v = c.df.agg(c.agg.alias("v")).collect()[0]["v"]
+        want.append((c.name, v, bool(c.comparison(v, c.expected))))
+    _, one = _jobs_in_group(
+        spark, "run_checks_one", lambda: checks.run_checks(pair[:1])
+    )
+    got, two = _jobs_in_group(
+        spark, "run_checks_fold", lambda: checks.run_checks(pair)
+    )
+    assert got == want
+    assert two == one

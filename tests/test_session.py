@@ -13,7 +13,10 @@ from __future__ import annotations
 
 import os
 
+from pyspark.sql import functions as F
+
 from data_lake_for_citi_bike_trip_spark.session import (
+    PAGE_SIZE,
     configure_runtime,
     ensure_active,
     get_session,
@@ -115,3 +118,36 @@ def test_stream_drain_clone_keeps_python_sources_usable(spark, tmp_path):
         from data_lake_for_citi_bike_trip_spark.session import ensure_active
 
         ensure_active(spark)
+
+
+def _memory_manager(spark):
+    return spark._jvm.org.apache.spark.SparkEnv.get().memoryManager()
+
+
+def test_get_session_pins_tungsten_page_size(spark):
+    """get_session sets the page size at construction, not Spark's
+    heap / cores default (64 MB under a 16g heap at 4 cores)."""
+    want = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        PAGE_SIZE
+    )
+    assert _memory_manager(get_session("tests")).pageSizeBytes() == want
+
+
+def test_small_string_keyed_broadcast_holds_little_storage_memory(spark):
+    """A broadcast hash relation on a string key is a BytesToBytesMap
+    that takes at least one whole page. With the heap-derived 64 MB page
+    a 100-row dim grew storage memory by >= 64 MB until the broadcast
+    was cleaned; with the pinned page it stays small."""
+    dim = spark.range(100).select(
+        F.concat(F.lit("k"), F.col("id").cast("string")).alias("k"),
+        (F.col("id") * 2).alias("v"),
+    )
+    fact = spark.range(1000).select(
+        F.concat(F.lit("k"), (F.col("id") % 100).cast("string")).alias("k")
+    )
+    mm = _memory_manager(spark)
+    before = mm.storageMemoryUsed()
+    n = fact.join(F.broadcast(dim), "k").count()
+    grown = mm.storageMemoryUsed() - before
+    assert n == 1000
+    assert grown < 16 * 2**20, grown

@@ -26,7 +26,9 @@ EOF2
 
 step "2/9 full pytest"
 python -m pytest tests/ -q 2>&1 | tail -2 | tee /tmp/preclose_pytest.txt
-grep -q " 0 failed\|passed" /tmp/preclose_pytest.txt || fail=1
+# pytest's own exit status, not a grep of its summary: "1 failed, 391
+# passed" contains "passed"
+[ "${PIPESTATUS[0]}" -eq 0 ] || fail=1
 
 step "3/9 oracle sweep sf0.001"
 python tools/check_oracle.py /root/testdata/sf0.001 > "CORRECTNESS_LOCAL_${TAG}_sf0001.txt" 2>&1
