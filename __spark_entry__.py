@@ -3355,56 +3355,17 @@ def _scoped_eager(spark: SparkSession) -> SparkSession:
     return streaming.scoped_session(spark, 8, no_data_batches=False)
 
 
-_IVF_INDEX_CACHE: dict[tuple, "similarity.IVFIndex"] = {}
-
-
-def _release_ann_caches() -> None:
-    """Drop the built ANN indexes (VERDICT r15 item 8): these hold
-    ``.cache()``d DataFrames for the process lifetime, so a bench cell
-    that only times the search after the first run is not an
-    end-to-end cost. Registered with ``caching.on_data_release`` —
-    ``bench.py`` releases data caches between queries, making every
-    ann_* FIRST run include index construction (queries_first_run);
-    long-lived sessions reclaim them at the usual ``release_caches``
-    maintenance moment."""
-    for idx in _IVF_INDEX_CACHE.values():
-        try:
-            idx.unpersist()
-        except Exception:
-            pass
-    _IVF_INDEX_CACHE.clear()
-    for cb, codes in _PQ_CACHE.values():
-        for df in (cb, codes):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-    _PQ_CACHE.clear()
-
-
-caching.on_data_release(_release_ann_caches)
-
-
 def _ivf_index(spark: SparkSession, sf_dir: str) -> "similarity.IVFIndex":
-    """Process-level IVF index cache: construction (k-means + inverted-
-    list assignment) runs ONCE per (session, sf_dir) and is reused by
-    every search — the production shape (persist the index, serve many
-    queries). Keyed by applicationId (stable, never recycled within a
-    process, unlike ``id(spark)`` which CPython can reuse after GC) so a
-    DataFrame is never served to a session it doesn't belong to; entries
-    from other applications are evicted on miss."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    if key not in _IVF_INDEX_CACHE:
-        for stale in [k for k in _IVF_INDEX_CACHE if k[0] != app_id]:
-            del _IVF_INDEX_CACHE[stale]
-        emb = load_table(spark, sf_dir, "embeddings")
-        _IVF_INDEX_CACHE[key] = similarity.build_ivf_index(emb, k=8, iters=2)
-    return _IVF_INDEX_CACHE[key]
+    """IVF index (k-means + inverted-list assignment) built inside the
+    calling query; ``build_ivf_index`` registers it through
+    ``caching.cached``, so it is released with every other operator
+    cache."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    return similarity.build_ivf_index(emb, k=8, iters=2)
 
 
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN search against the prebuilt (cached) index, run in
+    """IVF ANN search against an index built in this query, run in
     EXHAUSTIVE-probe configuration (nprobe == centroid count): every
     inverted list is scanned through the same routing/candidate plan as
     the pruned path, so the result is exactly brute-force top-k and the
@@ -3417,27 +3378,19 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PQ_CACHE: dict[tuple, tuple] = {}
-
-
 def _pq_index(spark: SparkSession, sf_dir: str, lossless: bool):
-    """Per-(application, sf_dir) cache of (codebooks, codes) — PQ
-    construction amortizes over every search, same shape as
-    ``_ivf_index``. Lossless (k=None) and lossy (k=8) variants cache
-    separately."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, lossless)
-    if key not in _PQ_CACHE:
-        for stale in [kk for kk in _PQ_CACHE if kk[0] != app_id]:
-            del _PQ_CACHE[stale]
-        emb = load_table(spark, sf_dir, "embeddings")
-        if lossless:
-            cb, codes = similarity.build_pq_lossless(emb, m=4)
-        else:
-            cb = similarity.build_pq_codebooks(emb, m=4, k=32, iters=2)
-            codes = similarity.pq_encode(emb, cb)
-        _PQ_CACHE[key] = (cb.cache(), codes.cache())
-    return _PQ_CACHE[key]
+    """(codebooks, codes) built inside the calling query. The codebooks
+    go through ``caching.cached``: ``pq_search`` consumes them twice
+    (its ``max(m)`` probe and the ADC join), and on the lossy path
+    ``pq_encode``'s probe and assignment add two more. The codes have
+    one consumer, the ADC join, so they stay uncached. Lossless: every
+    subvector is its own codeword; lossy: 32 codewords per subspace."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    if lossless:
+        cb, codes = similarity.build_pq_lossless(emb, m=4)
+        return caching.cached(cb), codes
+    cb = caching.cached(similarity.build_pq_codebooks(emb, m=4, k=32, iters=2))
+    return cb, similarity.pq_encode(emb, cb)
 
 
 def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3509,20 +3462,29 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_fact_trips(spark, SF_SMOKE)
 
 
-def _driver_green_rounds() -> dict[str, int]:
-    """query -> latest round with a green driver-gate row, scanned from
-    the CORRECTNESS_r*.json artifacts the driver writes next to this
-    file. Self-maintaining: each round's artifact automatically reorders
-    the gate rotation so never-checked queries go first and the rest
-    rotate least-recently-checked-first. A row is green iff it errored
-    nowhere and no recorded comparison (rows/schema/hash) failed —
-    rows-only checks (hash_match null for non-SQL ops) count."""
+def _driver_rounds() -> tuple[dict[str, int], set[str]]:
+    """One pass over the CORRECTNESS_r*.json artifacts the driver writes
+    next to this file; returns ``(green, reds)``:
+
+    - ``green``: query -> latest round with a green driver-gate row. A
+      row is green iff it errored nowhere and no recorded comparison
+      (rows/schema/hash) failed — rows-only checks (hash_match null for
+      non-SQL ops) count.
+    - ``reds``: queries with a recorded driver FAIL (any non-green row)
+      and no green row in the SAME or a LATER round — the worst
+      bookkeeping state: an uncontradicted driver red (VERDICT r07
+      item 1).
+
+    Self-maintaining: each round's artifact automatically reorders the
+    gate rotation in :func:`queries`. Unreadable or malformed artifacts
+    and rows are skipped."""
     import glob
     import json
     import re as _re
 
     here = os.path.dirname(os.path.abspath(__file__))
-    latest: dict[str, int] = {}
+    green: dict[str, int] = {}
+    red: dict[str, int] = {}
     for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
         m = _re.search(r"CORRECTNESS_r(\d+)\.json$", path)
         if not m:
@@ -3538,56 +3500,15 @@ def _driver_green_rounds() -> dict[str, int]:
         for name, row in rows.items():
             if not isinstance(row, dict):
                 continue
-            green = (
+            ok = (
                 row.get("err") is None
                 and row.get("rows_match") is True
                 and row.get("schema_match") is not False
                 and row.get("hash_match") is not False
             )
-            if green:
-                latest[name] = max(latest.get(name, 0), rnd)
-    return latest
-
-
-def _driver_unresolved_reds() -> set[str]:
-    """Queries with a recorded driver FAIL (any non-green row) and no
-    green row in the SAME or a LATER round — the worst bookkeeping
-    state: an uncontradicted driver red. These must sort before merely
-    never-checked queries so the gate re-certifies them first
-    (VERDICT r07 item 1)."""
-    import glob
-    import json
-    import re as _re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    red_latest: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        m = _re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            green = (
-                row.get("err") is None
-                and row.get("rows_match") is True
-                and row.get("schema_match") is not False
-                and row.get("hash_match") is not False
-            )
-            if not green:
-                red_latest[name] = max(red_latest.get(name, 0), rnd)
-    green_latest = _driver_green_rounds()
-    return {
-        n for n, r in red_latest.items() if r > green_latest.get(n, 0)
-    }
+            latest = green if ok else red
+            latest[name] = max(latest.get(name, 0), rnd)
+    return green, {n for n, r in red.items() if r > green.get(n, 0)}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -3608,8 +3529,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     driver row (VERDICT r08 item 5), so they must not be the ones that
     fall outside the 50-entry window when the pool exceeds it."""
     allq = _all_queries()
-    green = _driver_green_rounds()
-    reds = _driver_unresolved_reds()
+    green, reds = _driver_rounds()
     pillar = {
         "knn_blocked_pairs",
         "knn_blocked_recall",

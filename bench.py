@@ -21,6 +21,22 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def load_band(path: str, sf, cpus: int) -> dict:
+    """Per-query band from ``path`` (tools/bench_band.py), or ``{}``
+    when the file is missing or unreadable, or was built at another sf
+    or core count (a band without ``cpus`` predates the stamp and was
+    32-core). A band from another machine shape would flag box
+    differences as regressions, so the run is compared against none."""
+    try:
+        with open(path) as f:
+            band_file = json.load(f)
+    except (FileNotFoundError, json.JSONDecodeError):
+        return {}
+    if band_file.get("sf") != sf or band_file.get("cpus", 32) != cpus:
+        return {}
+    return band_file.get("band", {})
+
+
 def main() -> None:
     import __spark_entry__ as entrymod
     from data_lake_for_citi_bike_trip_spark.session import get_session
@@ -50,31 +66,21 @@ def main() -> None:
     timings: dict[str, float] = {}
     medians: dict[str, float] = {}
 
-    # COLD-START per query (r16, VERDICT r15 items 1-fix/2/8 — disclosed
-    # in OPTIMIZATION_r16.md / BENCH_NOTES.md): operator-internal caches
-    # and the built ANN indexes persist until released, so (a) identical
-    # cached subtrees (e.g. the copurchase edge list shared by the graph
-    # family) arrived WARM across queries, and (b) the ann_* cells timed
-    # only the search after their very first run of the process. All
-    # cached DATA (operator caches, ANN indexes, anything else in the
-    # CacheManager) is now dropped BETWEEN QUERIES (outside the timed
-    # region), so every query's FIRST run is the full from-parquet,
-    # build-everything cost — reported per query in "queries_first_run".
-    # The "queries" min keeps its old job (intrinsic per-query cost with
-    # box noise pinned; iterations after the first still reuse the
-    # query's OWN within-plan caches, as any repeated production query
-    # would). Plan-handle / metadata memos (load_table handles,
-    # ts-sniff, gate scalars) are deliberately kept: they hold no
-    # materialized data. BENCH_COLD_DATA=0 restores the old
-    # warm-across-queries methodology for historical A/B.
+    # COLD-START per query (r16, VERDICT r15 items 1-fix/2/8): all
+    # cached data — every operator cache (ANN indexes included) and
+    # anything else in the CacheManager — is dropped BETWEEN queries,
+    # outside the timed region, so each query's FIRST run is the full
+    # from-parquet, build-everything cost ("queries_first_run"). The
+    # "queries" min keeps its old job (intrinsic per-query cost with box
+    # noise pinned; iterations after the first still reuse the query's
+    # OWN caches, as a repeated production query would). Plan-handle /
+    # metadata memos (load_table handles, ts-sniff, gate scalars) are
+    # kept: they hold no materialized data.
     from data_lake_for_citi_bike_trip_spark import caching
 
-    cold_data = os.environ.get("BENCH_COLD_DATA", "1") == "1"
     first_runs: dict[str, float] = {}
 
     def _drop_data_caches() -> None:
-        if not cold_data:
-            return
         caching.release_data_caches()
         try:
             spark.catalog.clearCache()
@@ -118,9 +124,9 @@ def main() -> None:
         # r16 methodology additions (additions-only; see the cold-start
         # comment above): first run of each query = cold end-to-end
         # cost (no cached data, ANN index build included); cold_data
-        # records whether the between-queries release ran.
+        # records that the between-queries release ran.
         "queries_first_run": first_runs,
-        "cold_data": cold_data,
+        "cold_data": True,
         # Core count the board ran at (local[$SPARK_GRAFT_CPUS]). Boards
         # at different core counts are not comparable cell-for-cell, so
         # history consumers (tools/bench_band.py, the prev-board flag
@@ -138,7 +144,9 @@ def main() -> None:
     # apart with different query sets elevated (BENCH_NOTES.md r12),
     # so a single elevated board is box noise until it reproduces; a
     # real plan regression reproduces by definition. Single-board
-    # exceedances are reported as informational.
+    # exceedances are reported as informational. Only a band built at
+    # this run's sf and core count is used (load_band); without one,
+    # nothing is flagged.
     hist_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                              "BENCH_HISTORY.jsonl")
     prev = None
@@ -151,16 +159,9 @@ def main() -> None:
                     prev = rec
     except FileNotFoundError:
         pass
-    band = {}
-    band_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                             "BENCH_BAND.json")
-    try:
-        with open(band_path) as f:
-            band_file = json.load(f)
-        if band_file.get("sf") == result["sf"]:
-            band = band_file.get("band", {})
-    except (FileNotFoundError, json.JSONDecodeError):
-        pass
+    band = load_band(os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                                  "BENCH_BAND.json"),
+                     result["sf"], result["cpus"])
 
     def above_band(q, t):
         b = band.get(q)
@@ -208,16 +209,6 @@ def main() -> None:
                   + json.dumps({q: {"band_min": band[q]["min"],
                                     "prev": prev["queries"].get(q),
                                     "now": timings[q]} for q in sub_both}),
-                  file=sys.stderr)
-    elif prev:
-        # no band file yet: legacy single-board rule
-        regressions = {
-            q: {"prev": prev["queries"][q], "now": t}
-            for q, t in timings.items()
-            if q in prev["queries"] and t > prev["queries"][q] * 1.5 and t > 1.0
-        }
-        if regressions:
-            print(f"# regressions vs previous run: {json.dumps(regressions)}",
                   file=sys.stderr)
     with open(hist_path, "a") as f:
         f.write(json.dumps({"ts": time.time(), **result}) + "\n")

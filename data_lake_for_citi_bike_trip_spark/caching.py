@@ -1,22 +1,25 @@
-"""Session-lifetime cache registry for operator-internal persists.
+"""Session-lifetime cache registry: the one owner of cached data.
 
 Several operators cache an intermediate that the RETURNED lazy plan
 consumes more than once (LSH signature tables feeding both the rep
 aggregation and the member expansion; graph edge lists feeding every
-iteration of an iterative algorithm). The operator cannot unpersist
-before returning — the cache must outlive the call, because the caller
-may trigger the plan at any later time. Spark's ``CacheManager`` holds
-cached plans by strong reference, so without an explicit release these
-accumulate for the life of the session.
+iteration of an iterative algorithm; an ANN index's centroids feeding
+both query routing and the inverted-list assignment). The operator
+cannot unpersist before returning — the cache must outlive the call,
+because the caller may trigger the plan at any later time. Spark's
+``CacheManager`` holds cached plans by strong reference, so without an
+explicit release these accumulate for the life of the session.
 
-The contract: operators register such caches via :func:`cached`, and a
-long-lived session (a notebook, a service) reclaims them at a point
-where no previously returned plan will be re-executed by calling
-:func:`release_caches`. Short-lived jobs (the bench, the driver's
-correctness runs) never need to — the session teardown reclaims
-everything. ``spark.catalog.clearCache()`` remains the indiscriminate
-alternative; this registry only releases what operators registered, so
-caller-owned caches survive.
+The contract: every operator or query that keeps data cached does it
+through :func:`cached` (nothing holds cached DataFrames in module-level
+memos), and a caller reclaims them all at a point where no previously
+returned plan will be re-executed. :func:`release_data_caches` drops
+the cached data; :func:`release_caches` also clears the plan-handle /
+metadata memos registered with :func:`on_release`. Short-lived jobs
+(the driver's correctness runs) never need either — the session
+teardown reclaims everything. ``spark.catalog.clearCache()`` remains
+the indiscriminate alternative; this registry only releases what
+operators registered, so caller-owned caches survive.
 """
 
 from __future__ import annotations
@@ -25,7 +28,6 @@ from pyspark.sql import DataFrame
 
 _REGISTRY: list[DataFrame] = []
 _RELEASE_CALLBACKS: list = []
-_DATA_RELEASE_CALLBACKS: list = []
 
 
 def on_release(cb) -> None:
@@ -33,17 +35,6 @@ def on_release(cb) -> None:
     for operator-level memos whose lifetime must match the cache
     registry's (e.g. the salted-join gate memo in operators.skew)."""
     _RELEASE_CALLBACKS.append(cb)
-
-
-def on_data_release(cb) -> None:
-    """Register a zero-arg callback run by :func:`release_data_caches`
-    (and, transitively, by :func:`release_caches`) — for module-level
-    holders of MATERIALIZED data (e.g. the ANN index caches in the
-    entry surface) as opposed to plan-handle/metadata memos. The split
-    exists so a caller can drop every byte of cached DATA while keeping
-    the cheap plan memos (schema-inference handles, gate scalars) —
-    what a cold-cost benchmark wants between repeats."""
-    _DATA_RELEASE_CALLBACKS.append(cb)
 
 
 def cached(df: DataFrame) -> DataFrame:
@@ -64,13 +55,12 @@ def register(df: DataFrame) -> DataFrame:
 
 
 def release_data_caches(blocking: bool = False) -> int:
-    """Unpersist every operator-registered DataFrame cache and run the
-    data-release callbacks; returns how many registry entries dropped.
+    """Unpersist every registered DataFrame; returns how many.
 
-    Unlike :func:`release_caches` this does NOT clear the plan-handle /
-    metadata memos (load_table handles, ts-sniff flags, gate scalars) —
-    only materialized data goes. Re-execution after release is still
-    CORRECT (Spark recomputes from source), just cold."""
+    Keeps the :func:`on_release` memos (load_table handles, ts-sniff
+    flags, gate scalars), which hold no materialized data — what a
+    cold-cost benchmark wants between queries. Re-execution after
+    release is still CORRECT (Spark recomputes from source), just cold."""
     n = 0
     while _REGISTRY:
         df = _REGISTRY.pop()
@@ -79,16 +69,12 @@ def release_data_caches(blocking: bool = False) -> int:
         except Exception:
             pass  # session already stopped — nothing to release
         n += 1
-    for cb in _DATA_RELEASE_CALLBACKS:
-        try:
-            cb()
-        except Exception:
-            pass
     return n
 
 
 def release_caches(blocking: bool = False) -> int:
-    """Unpersist every operator-registered cache; returns how many.
+    """Unpersist every registered DataFrame and clear the
+    :func:`on_release` memos; returns how many DataFrames dropped.
 
     Call only when no DataFrame previously returned by an operator will
     be executed again (re-execution after release is still CORRECT —

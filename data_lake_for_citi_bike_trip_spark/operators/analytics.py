@@ -2011,33 +2011,19 @@ def alsobought_hitrate(lineitem: DataFrame, k: int = 3) -> DataFrame:
     w = Window.partitionBy("p").orderBy(
         F.desc("votes"), F.asc("q")
     )
-    # top is consumed twice (the hit join + the trained-parts count)
-    # and test was consumed twice (the hit semi-join probe + n_test) —
-    # each consumer re-planned the full quadratic basket self-join and
-    # the rank window with zero ReusedExchange
-    # (plans/r16/alsobought_hitrate_before.txt: 80 Exchanges, the
-    # 4-scan train subtree twice, the test subtree twice). Two fixes
-    # (guide S2.4): cache the tiny top residue (<= parts x k rows,
-    # same pattern as nation_assortment_overlap above), and consume
-    # test ONCE — a left join against top's unique (p, q) rows with a
-    # match marker feeds n_test and n_hits from a single aggregate,
-    # replacing the semi-join + two separate counts (a left join on a
-    # unique key neither drops nor duplicates probe rows, so
-    # count(1) = n_test and count(marker) = semi-join row count
-    # exactly). test is ALSO cached: it has one consumer in the plan,
-    # but a repeated caller (bench iterations 2+) reuses the
-    # materialized pair set instead of re-running the quadratic
-    # self-join. Interleaved A/B at sf0.1 (same session, variant
-    # flipped per round, caches dropped before each cold run):
-    # warm min 1.87-2.08 -> 0.52-0.63 s; cold first-run pays the
-    # pair-set materialization, 1.9-2.2 -> 2.9-3.8 s — the tradeoff
-    # the bench's queries_first_run column prices explicitly.
+    # top is consumed twice (the hit join + the trained-parts count);
+    # uncached, each consumer re-planned the quadratic basket self-join
+    # and the rank window (plans/r16/alsobought_hitrate_before.txt), so
+    # the tiny residue (<= parts x k rows) is cached. test is consumed
+    # ONCE: a left join against top's unique (p, q) rows with a match
+    # marker feeds n_test (count(1)) and n_hits (count(marker)) from a
+    # single aggregate, and a single consumer needs no cache.
     top = cached(
         train.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= k)
         .select("p", "q")
     )
-    test = cached(pairs(1).distinct())
+    test = pairs(1).distinct()
     flagged = test.join(
         top.withColumn("hit", F.lit(1)), ["p", "q"], "left"
     )

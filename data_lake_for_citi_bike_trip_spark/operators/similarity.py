@@ -18,8 +18,6 @@ cross-engine stable (see oracles.py parity rules).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -32,12 +30,7 @@ from .skew import salted_candidates
 def _overlap_jobs(*thunks):
     """Run independent driver-blocking jobs concurrently so later jobs
     back-fill executors freed by the first one's straggler tail (guide
-    §2.6). ``SPARK_GRAFT_SERIAL_READOUT=1`` runs them sequentially —
-    the r16 A/B switch for the r15 verdict's knn-family regression
-    question (and the right setting on a 1-2 core deployment, where
-    three concurrent jobs only contend)."""
-    if os.environ.get("SPARK_GRAFT_SERIAL_READOUT") == "1":
-        return [t() for t in thunks]
+    §2.6)."""
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
@@ -253,39 +246,27 @@ class IVFIndex:
     lists (the corpus tagged with its nearest centroid id).
 
     Index CONSTRUCTION (k-means + assignment — the expensive, iterative
-    part) is separated from SEARCH so that construction cost amortizes
-    over every query batch, exactly as a production deployment would
-    persist the assignment table once and serve many searches. ``cache()``
-    keeps both sides resident; on a real cluster the index DataFrame
-    would instead be written as a parquet table bucketed by ``cid`` so
-    searches shuffle nothing.
+    part) is separated from SEARCH so that one built index serves every
+    search in the plans that hold it. Both sides are registered with
+    ``caching.cached`` (centroids feed the assignment AND query routing;
+    the inverted lists feed every search), so they live until the
+    caller's ``caching.release_caches``. On a real cluster the index
+    DataFrame would instead be written as a parquet table bucketed by
+    ``cid`` so searches shuffle nothing.
     """
 
     def __init__(self, centroids: DataFrame, index: DataFrame):
         self.centroids = centroids
         self.index = index
 
-    def unpersist(self) -> None:
-        for df in (self.centroids, self.index):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-
 
 def build_ivf_index(
-    embeddings: DataFrame,
-    k: int | None = None,
-    iters: int = 3,
-    cache: bool = True,
+    embeddings: DataFrame, k: int | None = None, iters: int = 3
 ) -> IVFIndex:
     """Train centroids and materialize the inverted-list assignment.
     ``k=None`` derives the centroid count from the corpus size."""
-    centroids = train_ivf_centroids(embeddings, k=k, iters=iters)
-    index = _assign(_prepared(embeddings), centroids)
-    if cache:
-        centroids = centroids.cache()
-        index = index.cache()
+    centroids = cached(train_ivf_centroids(embeddings, k=k, iters=iters))
+    index = cached(_assign(_prepared(embeddings), centroids))
     return IVFIndex(centroids, index)
 
 

@@ -41,3 +41,29 @@ def test_build_band_skips_foreign_core_counts(tmp_path, monkeypatch):
     band8 = bench_band.build_band(sf=0.1, n_boards=8, cpus=8)
     assert band8["q1"]["min"] == 0.5
     assert band8["q1"]["n"] == 1
+
+
+def test_bench_ignores_band_from_another_core_count(tmp_path, monkeypatch):
+    """A band written at 4 cores loads for a 4-core run only: a board at
+    any other core count (or sf) gets an empty band, so no query can be
+    flagged against another machine shape. A band without ``cpus``
+    predates the stamp and loads as 32-core."""
+    import bench
+
+    records = [{"sf": 0.1, "cpus": 4, "queries": {"q1": 0.5}}]
+    out = tmp_path / "band.json"
+    monkeypatch.setattr(bench_band, "HIST", _write_hist(tmp_path, records))
+    monkeypatch.setattr(bench_band, "OUT", str(out))
+    monkeypatch.setattr(sys, "argv", ["bench_band.py", "--cpus", "4"])
+    bench_band.main()
+    assert json.loads(out.read_text())["cpus"] == 4
+
+    assert bench.load_band(str(out), 0.1, 4)["q1"]["min"] == 0.5
+    assert bench.load_band(str(out), 0.1, 32) == {}
+    assert bench.load_band(str(out), 0.01, 4) == {}
+    assert bench.load_band(str(tmp_path / "missing.json"), 0.1, 4) == {}
+
+    legacy = tmp_path / "legacy.json"
+    legacy.write_text(json.dumps({"sf": 0.1, "band": {"q1": {"min": 2.0}}}))
+    assert bench.load_band(str(legacy), 0.1, 4) == {}
+    assert bench.load_band(str(legacy), 0.1, 32) == {"q1": {"min": 2.0}}

@@ -51,3 +51,29 @@ def test_ts_sniff_memo_clears_on_release(spark):
     pipeline._TS_SNIFF_MEMO["/fake/events.parquet"] = True
     caching.release_caches()
     assert pipeline._TS_SNIFF_MEMO == {}
+
+
+def test_ann_indexes_live_in_the_registry(spark, sf_dir):
+    """The ANN queries build their indexes through ``cached()``: the
+    registry grows, one ``release_data_caches`` leaves the JVM
+    CacheManager empty (no index escapes into a module-level memo), and
+    a rerun rebuilds the index with identical rows."""
+    import __spark_entry__ as entry
+
+    caching.release_caches()
+    spark.catalog.clearCache()
+    names = ["ann_ivf_topk", "ann_pq_recall"]
+
+    def run():
+        return {
+            n: sorted(tuple(r) for r in entry._all_queries()[n](spark, sf_dir).collect())
+            for n in names
+        }
+
+    first = run()
+    assert caching.registered_count() > 0
+    caching.release_data_caches()
+    assert caching.registered_count() == 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert run() == first
+    caching.release_caches()

@@ -2,8 +2,9 @@
 
 A real multi-tenant deployment runs many queries against one session
 (thread pools / FAIR scheduler); results must match serial execution
-and the per-process caches (IVF index, partsupp materialization, lake
-scratch dirs) must be race-free.
+and the shared state (the operator cache registry each ANN query builds
+its IVF index into, the partsupp materialization, lake scratch dirs)
+must be race-free.
 """
 
 from __future__ import annotations

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from data_lake_for_citi_bike_trip_spark import caching
 from data_lake_for_citi_bike_trip_spark.operators import dedup, similarity
 from data_lake_for_citi_bike_trip_spark.sources.registry import load_table
 
@@ -98,7 +99,9 @@ def test_ivf_exhaustive_probe_equals_brute_force(spark, sf_dir):
     ann_ivf_topk oracle relies on), regardless of what k-means learned."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 5)
-    ivf_index = similarity.build_ivf_index(emb, k=8, iters=1, cache=True)
+    n_registered = caching.registered_count()
+    ivf_index = similarity.build_ivf_index(emb, k=8, iters=1)
+    assert caching.registered_count() == n_registered + 2  # centroids + lists
     try:
         ivf = similarity.ivf_search(ivf_index, queries, k=10, nprobe=8)
         bf = similarity.cosine_topk(emb, queries, k=10)
@@ -109,7 +112,7 @@ def test_ivf_exhaustive_probe_equals_brute_force(spark, sf_dir):
         again = similarity.ivf_search(ivf_index, queries, k=3, nprobe=2)
         assert again.groupBy("q_id").count().where(F.col("count") > 3).count() == 0
     finally:
-        ivf_index.unpersist()
+        caching.release_caches()
 
 
 def test_ngram_jaccard_frequency_cap(spark, sf_dir):

@@ -357,8 +357,7 @@ def test_gate_rotation_frontloads_unchecked_queries():
     import __spark_entry__ as entrymod
 
     q = list(entrymod.queries())
-    green = entrymod._driver_green_rounds()
-    reds = entrymod._driver_unresolved_reds()
+    green, reds = entrymod._driver_rounds()
     # ever-red (no subsequent pass) sorts before every other query
     for n in reds:
         if n not in q:
@@ -548,3 +547,55 @@ def test_two_pass_rewrites_keep_global_windows_bounded(spark, sf_dir):
         for i in singles:
             child = lines[i + 1].lstrip(" :+-")
             assert agg_child.match(child), (name, lines[i + 1])
+
+
+def _point_entry_at(monkeypatch, entrymod, directory):
+    """The rotation scans CORRECTNESS_r*.json next to the entry module."""
+    monkeypatch.setattr(entrymod, "__file__", str(directory / "__spark_entry__.py"))
+
+
+def test_driver_rounds_over_synthetic_artifacts(tmp_path, monkeypatch):
+    """Red-then-green resolves to green; green-then-red is an unresolved
+    red; a malformed artifact (bad JSON, non-dict payload or row) is
+    skipped without hiding the good ones."""
+    import json
+
+    import __spark_entry__ as entrymod
+
+    green = {"err": None, "rows_match": True, "hash_match": None}
+    red = {"err": None, "rows_match": False}
+    (tmp_path / "CORRECTNESS_r01.json").write_text(
+        json.dumps({"fixed": red, "broke": green, "steady": green})
+    )
+    (tmp_path / "CORRECTNESS_r02.json").write_text(
+        json.dumps({"fixed": green, "broke": {"err": "boom"}, "odd": "x"})
+    )
+    (tmp_path / "CORRECTNESS_r03.json").write_text("{not json")
+    (tmp_path / "CORRECTNESS_r04.json").write_text(json.dumps(["steady"]))
+    _point_entry_at(monkeypatch, entrymod, tmp_path)
+    green_rounds, reds = entrymod._driver_rounds()
+    assert green_rounds == {"fixed": 2, "broke": 1, "steady": 1}
+    assert reds == {"broke"}
+
+
+def test_gate_rotation_over_committed_artifacts_is_pinned(tmp_path, monkeypatch):
+    """queries() order over the 16 committed CORRECTNESS_r*.json
+    artifacts, pinned by digest: a refactor of the artifact scan must
+    not move a single query. Re-pin only when the query set changes."""
+    import hashlib
+    import os
+    import shutil
+
+    import __spark_entry__ as entrymod
+
+    here = os.path.dirname(os.path.abspath(entrymod.__file__))
+    for i in range(1, 17):
+        shutil.copy(os.path.join(here, f"CORRECTNESS_r{i:02d}.json"), tmp_path)
+    _point_entry_at(monkeypatch, entrymod, tmp_path)
+    q = list(entrymod.queries())
+    assert len(q) == 384
+    assert q[:3] == ["lang_source_matrix", "dom_billing_cycle", "chars_integrity"]
+    digest = hashlib.sha256("\n".join(q).encode()).hexdigest()
+    assert digest == (
+        "08bcc010956ad7e5b7500273fae405591b991f8e60fa2051a6b74a32a1d02828"
+    )

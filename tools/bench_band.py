@@ -8,7 +8,8 @@ board against the single previous board produces false calls in both
 directions. This tool freezes a per-query band from the last N
 committed same-sf boards:
 
-    BENCH_BAND.json: {query: {"min": s, "median": s, "n": boards}}
+    BENCH_BAND.json: {"sf": sf, "cpus": cores, "n_boards": N,
+                      "band": {query: {"min": s, "median": s, "n": boards}}}
 
 computed over each board's per-query MIN timings (the stable statistic;
 medians absorb the box's first-heavy-query warm-up charge unevenly).
@@ -18,7 +19,8 @@ regression candidate only when it is above band — above
 ``max(1.0 s, 1.5 x band min)`` — on BOTH the new board and the previous
 same-sf board. One elevated board is box noise until it reproduces;
 a real plan regression reproduces by definition. Fresh queries with no
-band entry are informational only.
+band entry are informational only. bench.py ignores a band built at
+another sf or core count (``cpus``; a band without it was 32-core).
 
 Usage: python tools/bench_band.py [--sf 0.1] [--n 8]
 Run at round open / preclose so the band reflects only COMMITTED
@@ -73,12 +75,12 @@ def main() -> None:
     args = ap.parse_args()
     band = build_band(args.sf, args.n, args.cpus)
     with open(OUT, "w") as f:
-        json.dump({"sf": args.sf, "n_boards": args.n, "band": band}, f,
-                  indent=1, sort_keys=True)
+        json.dump({"sf": args.sf, "cpus": args.cpus, "n_boards": args.n,
+                   "band": band}, f, indent=1, sort_keys=True)
     n = len(band)
     full = sum(1 for v in band.values() if v["n"] >= args.n)
-    print(f"BENCH_BAND.json: {n} queries banded at sf={args.sf} "
-          f"({full} with all {args.n} boards)")
+    print(f"BENCH_BAND.json: {n} queries banded at sf={args.sf}, "
+          f"{args.cpus} cpus ({full} with all {args.n} boards)")
 
 
 if __name__ == "__main__":

@@ -566,8 +566,8 @@ NOTES = {
     "stream_txn_merge": "returned plan reads the transactional table's "
     "final snapshot + tombstone filter; the drain itself ran per-batch "
     "key-partitioned merges with txn-id replay skip",
-    "ann_pq_topk": "ADC search: codebooks broadcast into the distance "
-    "table, ONE hash join onto the cached code table, grouped ordered "
+    "ann_pq_topk": "ADC search: cached codebooks broadcast into the "
+    "distance table, ONE hash join onto the code table, grouped ordered "
     "fold — raw corpus vectors never touched at search time",
     "graph_pagerank": "per iteration: rank vector broadcast onto the "
     "cached edge list (Pregel vertex-state shape), one dst-keyed "
@@ -595,10 +595,10 @@ NOTES = {
     "dedup_incremental": "asymmetric band join: new-shard bands x old "
     "bands (hash equi-join on band key), old x old never formed; exact "
     "tier is one shuffle on the md5 digest; exact wins via left_anti",
-    "ann_ivf_topk": "search against the prebuilt CACHED index (InMemory"
-    "TableScan): centroid routing broadcast, candidates via hash join "
-    "on cid, per-query top-k window. Index build cost amortized across "
-    "every search in the session",
+    "ann_ivf_topk": "search against the index built in the query and "
+    "cached through caching.cached (InMemoryTableScan): centroid routing "
+    "broadcast, candidates via hash join on cid, per-query top-k window; "
+    "the index is released with every other operator cache",
     "multimodal_png_pixels": "two Arrow-batched mapInPandas stages "
     "(encode, decode) — payload bytes cross the JVM boundary once per "
     "batch; everything between stays columnar",

@@ -127,8 +127,7 @@ def main() -> None:
                 ).collect()
 
             def pq_pipeline():
-                # cache cb/codes exactly as the contract query's
-                # _pq_index does: the PQ property IS that a deployment
+                # cache cb/codes: the PQ property IS that a deployment
                 # persists the index — uncached, every downstream
                 # action (including pq_search's .first() for m)
                 # re-runs the whole Lloyd train, and a first soak pass
