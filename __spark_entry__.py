@@ -15,6 +15,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from data_lake_for_citi_bike_trip_spark import caching, oracles
 from data_lake_for_citi_bike_trip_spark.operators import (
@@ -1590,6 +1591,31 @@ def q_stream_join_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     return streaming.run_available_now(counts, "q_stream_join_window", "append")
 
 
+class _RowsRead(StreamingQueryListener):
+    """(query id, input rows) of every micro-batch that the streams of
+    the session it is added to commit. Events come from the listener
+    bus: ``recentProgress``/``lastProgress`` keep only
+    ``numRecentProgressUpdates`` - 1 entries (none at 1), so a drain
+    longer than that hides batches from them. Append-only, so the
+    callback thread and a reader need no lock."""
+
+    def __init__(self):
+        self.batches: list[tuple[str, int]] = []
+
+    def rows(self, query_id: str) -> int:
+        return sum(n for qid, n in self.batches if qid == query_id)
+
+    def onQueryStarted(self, event):
+        pass
+
+    def onQueryProgress(self, event):
+        p = event.progress
+        self.batches.append((str(p.id), p.numInputRows))
+
+    def onQueryTerminated(self, event):
+        pass
+
+
 def q_pystream_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom Python STREAMING data source (Spark 4
     SimpleDataSourceStreamReader): offset-bounded micro-batches from a
@@ -1616,34 +1642,35 @@ def q_pystream_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4000/4000/2000).
     import time
 
-    query = (
-        agg.writeStream.format("memory")
-        .queryName("q_pystream_agg")
-        .outputMode("complete")
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
+    listener = _RowsRead()
+    scoped.streams.addListener(listener)
+    query = None
     try:
+        query = (
+            agg.writeStream.format("memory")
+            .queryName("q_pystream_agg")
+            .outputMode("complete")
+            .trigger(processingTime="0 seconds")
+            .start()
+        )
         deadline = time.monotonic() + 120
         while time.monotonic() < deadline:
-            # DRIVER-side drain detection (r16): each progress entry is
-            # emitted after its batch fully commits to the sink, so
-            # summing numInputRows needs no Spark job — the old loop
-            # ran a full aggregate job over the memory table per 0.3 s
-            # poll. One confirming aggregate job still gates the return
-            # (the hard correctness check the TimeoutError protects).
-            read = sum(p["numInputRows"] for p in query.recentProgress)
-            if read >= 10000:
-                got = (
-                    scoped.table("q_pystream_agg").agg(F.sum("n")).first()[0]
-                )
+            # DRIVER-side drain detection: a progress event is posted
+            # after its batch fully commits to the sink, so counting its
+            # input rows needs no Spark job per poll. One confirming
+            # aggregate job still gates the return (the hard correctness
+            # check the TimeoutError protects).
+            if listener.rows(query.id) >= 10000:
+                got = scoped.table("q_pystream_agg").agg(F.sum("n")).first()[0]
                 if got == 10000:
                     break
             time.sleep(0.05)
         else:
             raise TimeoutError("pystream feed never fully drained")
     finally:
-        query.stop()
+        if query is not None:
+            query.stop()
+        scoped.streams.removeListener(listener)
     return scoped.table("q_pystream_agg")
 
 

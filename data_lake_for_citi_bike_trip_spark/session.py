@@ -6,8 +6,20 @@ pinned UTC session timezone (the hour-bucket join key in SURVEY.md §2.3 J2
 is timezone-sensitive), AQE enabled for runtime re-planning (skew joins,
 partition coalescing), and sane shuffle parallelism.
 
+``get_session`` also fixes two construction-time settings of the JVM it
+launches: the Tungsten page size (``PAGE_SIZE``) and a HotSpot compiler
+policy (``JIT_POLICY``). Under ``local[N]`` the driver JVM is also the
+executor, and C2-compiling code that runs too little to pay it back
+costs CPU that a short process never earns back; the policy gives C2 one
+thread and raises its thresholds. It is set only for a ``local`` master,
+as ``spark.driver.defaultJavaOptions``: Spark prepends that to the
+driver's options, while a ``--driver-java-options`` in
+``PYSPARK_SUBMIT_ARGS`` replaces ``spark.driver.extraJavaOptions``. A
+``defaultJavaOptions`` from ``spark-defaults.conf`` is replaced by it.
+
 ``configure_runtime`` is idempotent and safe to call on a session we did
 not create (the driver hands us one); it only sets runtime-settable confs.
+Such a session keeps its own JVM: its page size and compiler policy.
 """
 
 from __future__ import annotations
@@ -32,6 +44,30 @@ from pyspark.sql import SparkSession
 #: Construction-time only: ``MemoryManager`` reads it when ``SparkEnv``
 #: is built.
 PAGE_SIZE = "4m"
+
+#: HotSpot compiler policy of the driver JVM, which under ``local[N]``
+#: is also the executor. Every query's whole-stage Java is compiled by
+#: Janino and then by HotSpot, and in a short process much of C2's work
+#: is on code that runs too little to pay it back. Policy: two compiler
+#: threads, one C1 and one C2 (HotSpot picks 3 at 4 cores and 15 at 32),
+#: and each of the four Tier4 (C2) thresholds at 3x HotSpot's default
+#: (invocations 5000 -> 15000, minimum invocations 600 -> 1800,
+#: invocations plus back-edges 15000 -> 45000, loop back-edges
+#: 40000 -> 120000), so only code that stays hot is handed to C2. C1 is
+#: untouched: C1-only made the sf0.1 compute cells 2-4x slower. On 4
+#: cores, 10 order-alternated perfbench pairs: an ``elt_ingest`` pass's
+#: CPU 99.4 -> 80.3 s median and its summed JIT time 54.2 -> 30.9 s. The
+#: cost: ``text_repetition``'s sf0.1 first run in a fresh process is
+#: about 0.9 s slower (warm runs the same); 10x thresholds slowed all
+#: four compute cells, and 3x with HotSpot's thread count saved too
+#: little CPU to measure (CHANGES.md).
+#: Chosen on 4 cores; not measured at 32. Construction-time only, passed
+#: as ``spark.driver.defaultJavaOptions`` (see the module docstring).
+JIT_POLICY = (
+    "-XX:CICompilerCount=2 "
+    "-XX:Tier4InvocationThreshold=15000 -XX:Tier4MinInvocationThreshold=1800 "
+    "-XX:Tier4CompileThreshold=45000 -XX:Tier4BackEdgeThreshold=120000"
+)
 
 #: Runtime-settable confs applied to every session we touch.
 RUNTIME_CONF: dict[str, str] = {
@@ -160,9 +196,10 @@ def ensure_active(spark: SparkSession) -> SparkSession:
 def configure_runtime(spark: SparkSession) -> SparkSession:
     """Apply runtime confs to an existing session (idempotent).
 
-    Construction-time confs (``PAGE_SIZE``, driver memory) cannot be
-    applied here: a session the driver hands us keeps its own page size,
-    Spark's heap-derived default unless its builder set one."""
+    Construction-time confs (``PAGE_SIZE``, ``JIT_POLICY``, driver
+    memory) cannot be applied here: a session the driver hands us keeps
+    its own page size, Spark's heap-derived default unless its builder
+    set one, and its JVM's own compiler policy."""
     for key, value in RUNTIME_CONF.items():
         try:
             spark.conf.set(key, value)
@@ -188,7 +225,8 @@ def get_session(
     if master:
         builder = builder.master(master)
     elif "SPARK_MASTER" not in os.environ:
-        builder = builder.master(f"local[{cpus}]")
+        master = f"local[{cpus}]"
+        builder = builder.master(master)
     builder = builder.config(
         "spark.sql.shuffle.partitions", str(shuffle_partitions or max(cpus, 8))
     )
@@ -213,6 +251,10 @@ def get_session(
         "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g")
     )
     builder = builder.config("spark.buffer.pageSize", PAGE_SIZE)
+    if (master or os.environ["SPARK_MASTER"]).startswith("local"):
+        # Only where the driver JVM is the executor (see JIT_POLICY).
+        # Replaces a defaultJavaOptions from spark-defaults.conf.
+        builder = builder.config("spark.driver.defaultJavaOptions", JIT_POLICY)
     spark = builder.getOrCreate()
     # Register the engine's Python data sources up front so every session
     # we hand out can read/write them without a per-query register call

@@ -11,11 +11,15 @@ on the PARENT to the clone's empty manager (DATA_SOURCE_NOT_FOUND).
 
 from __future__ import annotations
 
+import json
 import os
+import subprocess
+import sys
 
 from pyspark.sql import functions as F
 
 from data_lake_for_citi_bike_trip_spark.session import (
+    JIT_POLICY,
     PAGE_SIZE,
     configure_runtime,
     ensure_active,
@@ -151,3 +155,99 @@ def test_small_string_keyed_broadcast_holds_little_storage_memory(spark):
     grown = mm.storageMemoryUsed() - before
     assert n == 1000
     assert grown < 16 * 2**20, grown
+
+
+_JIT_CHILD = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from data_lake_for_citi_bike_trip_spark.session import JIT_POLICY, get_session
+
+spark = get_session("jit-policy", master="local[1]")
+jvm = spark._jvm
+bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+    jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+)
+flags = {}
+for opt in JIT_POLICY.split():
+    name = opt[len("-XX:"):].split("=")[0]
+    flags[name] = bean.getVMOption(name).getValue()
+print("RESULT " + json.dumps(
+    {"flags": flags, "x": jvm.java.lang.System.getProperty("x")}
+))
+spark.stop()
+"""
+
+
+def test_jit_policy_reaches_the_driver_jvm_alongside_submit_args():
+    """get_session's compiler policy is live in the JVM it launches, read
+    back from HotSpot, not from the conf: Spark starts the driver with
+    -XX:+IgnoreUnrecognizedVMOptions, so a misspelled flag would be
+    dropped silently. The child also passes --driver-java-options, as
+    perfbench does; that option replaces a builder-set
+    spark.driver.extraJavaOptions, while defaultJavaOptions is prepended
+    and both reach the JVM."""
+    env = dict(
+        os.environ,
+        PYSPARK_SUBMIT_ARGS="--driver-java-options -Dx=y pyspark-shell",
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _JIT_CHILD, root],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    line = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT ")][0]
+    got = json.loads(line[len("RESULT "):])
+    want = dict(opt[len("-XX:"):].split("=") for opt in JIT_POLICY.split())
+    assert got["flags"] == want  # e.g. Tier4InvocationThreshold 15000, not 5000
+    assert got["x"] == "y"
+
+
+def test_jit_policy_is_set_only_for_a_local_master(monkeypatch):
+    """The compiler policy is for a driver JVM that is also the executor.
+    A master from the environment that is not local (a cluster) gets the
+    builder without it; the builder is recorded, not started."""
+    from data_lake_for_citi_bike_trip_spark import session
+
+    class Built(Exception):
+        pass
+
+    class Recorder:
+        def __init__(self):
+            self.confs = {}
+
+        def appName(self, name):
+            return self
+
+        def master(self, master):
+            return self
+
+        def config(self, key, value):
+            self.confs[key] = value
+            return self
+
+        def getOrCreate(self):
+            raise Built
+
+    def confs(master, env_master):
+        builder = Recorder()
+        monkeypatch.setattr(session.SparkSession, "builder", builder)
+        if env_master is None:
+            monkeypatch.delenv("SPARK_MASTER", raising=False)
+        else:
+            monkeypatch.setenv("SPARK_MASTER", env_master)
+        try:
+            session.get_session(master=master)
+        except Built:
+            return builder.confs
+        raise AssertionError("getOrCreate was not reached")
+
+    key = "spark.driver.defaultJavaOptions"
+    assert confs(None, None)[key] == JIT_POLICY
+    assert confs("local[2]", None)[key] == JIT_POLICY
+    assert confs(None, "local[4]")[key] == JIT_POLICY
+    assert key not in confs(None, "spark://head:7077")
+    assert key not in confs("yarn", None)

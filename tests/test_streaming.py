@@ -460,3 +460,20 @@ def test_eager_drain_skips_no_data_batch_same_rows(spark, sf_dir):
 
     with_batch, without_batch = rows(True), rows(False)
     assert with_batch == without_batch and len(with_batch) > 0
+
+
+def test_pystream_agg_drains_past_a_one_entry_progress_buffer(spark, sf_dir):
+    """q_pystream_agg counts the rows its drain has read through a
+    StreamingQueryListener. The query's recentProgress buffer keeps
+    numRecentProgressUpdates - 1 entries (none at 1), so a sum over it
+    never reached the feed's 10000 rows and the drain timed out."""
+    import __spark_entry__ as entry
+
+    clone = pipeline.scoped_session(spark, 8)  # the drain's memoized clone
+    key = "spark.sql.streaming.numRecentProgressUpdates"
+    clone.conf.set(key, "1")
+    try:
+        out = entry.q_pystream_agg(spark, sf_dir)
+        assert out.agg(F.sum("n")).first()[0] == 10000
+    finally:
+        clone.conf.unset(key)

@@ -24,10 +24,13 @@ print(f"bench: {d['value']}s over {len(d['queries'])} queries "
       f"(mean {d['value']/len(d['queries']):.3f}s)")
 EOF2
 
-step "2/9 full pytest"
+step "2/9 full pytest (tests/ and perfbench/)"
 python -m pytest tests/ -q 2>&1 | tail -2 | tee /tmp/preclose_pytest.txt
 # pytest's own exit status, not a grep of its summary: "1 failed, 391
 # passed" contains "passed"
+[ "${PIPESTATUS[0]}" -eq 0 ] || fail=1
+# the benchmark's own tests (perfbench/test_perfbench.py), same rule
+python -m pytest perfbench -q 2>&1 | tail -2 | tee -a /tmp/preclose_pytest.txt
 [ "${PIPESTATUS[0]}" -eq 0 ] || fail=1
 
 step "3/9 oracle sweep sf0.001"
