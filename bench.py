@@ -39,7 +39,10 @@ def load_band(path: str, sf, cpus: int) -> dict:
 
 def main() -> None:
     import __spark_entry__ as entrymod
-    from data_lake_for_citi_bike_trip_spark.session import get_session
+    from data_lake_for_citi_bike_trip_spark.session import (
+        default_parallelism,
+        get_session,
+    )
 
     spark = get_session("bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -132,7 +135,7 @@ def main() -> None:
         # history consumers (tools/bench_band.py, the prev-board flag
         # below) must not mix them; entries without the field predate
         # the stamp and were all 32-core.
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8)),
+        "cpus": default_parallelism(),
     }
 
     # Per-query history (appended per run) lets later rounds spot

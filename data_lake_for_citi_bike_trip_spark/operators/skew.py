@@ -1,16 +1,20 @@
-"""Skew and co-location machinery for big joins.
+"""Skew handling for big joins and per-key windows.
 
-Two complements to AQE's runtime skew splitting:
+Complements to AQE's runtime skew splitting:
 
 - ``salted_join`` — static salting for *known* hot keys: the big side
   scatters each key across N sub-partitions (deterministic hash of a
   secondary column, never rand() — retries must route rows identically),
   the small side replicates N ways. Turns one straggler partition into N
   even ones at the cost of an N-times-larger build side.
-- ``write_bucketed`` / co-located joins — pre-shuffle at write time:
-  two tables bucketed by the same key and bucket count join WITHOUT a
-  shuffle exchange (the scan is already hash-partitioned). This is the
-  repeated-join amortization story: pay the shuffle once at ingest.
+- ``salted_candidates`` — the same scatter, applied only to keys whose
+  per-key pair count says they are hot (similarity candidate joins).
+- ``hot_window_gate`` / ``auto_bucket_width`` — decide whether a per-key
+  window needs time-segmenting, and how wide its buckets are.
+- ``key_skew_profile`` — the heavy hitters of a key, before choosing.
+
+The engine's bucketed table (pay the shuffle once at write time) is
+``sqlsurface.ensure_partsupp``.
 """
 
 from __future__ import annotations
@@ -40,74 +44,6 @@ from ..caching import on_release, register
 #: memo along with the kstats caches the verdicts point at.
 _GATE_MEMO: dict = {}
 on_release(_GATE_MEMO.clear)
-
-#: logical bucketed tables registered by write_bucketed this session,
-#: keyed (id(session), table_name) -> session. release_caches — the
-#: session's declared maintenance moment — refreshes this process's
-#: OWN tables' heartbeat files, and (opt-in via
-#: SPARK_GRAFT_SWEEP_BUCKETED=1) sweeps stale sibling directories
-#: (VERDICT r11 item 3 wanted GC in the normal lifecycle; ADVICE r12
-#: flagged the default-on deletion as a destructive side effect inside
-#: an operation documented recompute-safe, so deletion is now opt-in
-#: and liveness is a heartbeat file, not directory mtime — parquet
-#: reads never bump mtime, so a long-lived reader looked dead).
-_BUCKETED_SWEEP: dict = {}
-
-#: name of the liveness marker write_bucketed drops inside each
-#: physical table directory; touched again on every release_caches of
-#: the owning process, consulted (in preference to directory mtime) by
-#: sweep_stale_bucketed before deleting.
-_HEARTBEAT = "_SPARK_GRAFT_HEARTBEAT"
-
-
-def _warehouse_path(spark: SparkSession) -> str:
-    from urllib.parse import urlparse
-
-    return urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-
-
-def _touch_heartbeat(wh: str, phys: str) -> None:
-    import os
-
-    try:
-        path = os.path.join(wh, phys, _HEARTBEAT)
-        with open(path, "a"):
-            pass
-        os.utime(path, None)
-    except OSError:
-        pass  # heartbeat is advisory; sweep falls back to dir mtime
-
-
-def _sweep_registered_bucketed() -> None:
-    import os
-
-    sweep_enabled = os.environ.get("SPARK_GRAFT_SWEEP_BUCKETED", "") == "1"
-    for memo_key in list(_BUCKETED_SWEEP):
-        spark = _BUCKETED_SWEEP[memo_key]
-        name = memo_key[1]
-        try:
-            if spark.sparkContext._jsc is None:  # session stopped
-                _BUCKETED_SWEEP.pop(memo_key, None)
-                continue
-            # Always: re-assert this process's liveness on its own
-            # physical dirs so OTHER processes' opt-in sweeps see a
-            # fresh heartbeat while we are alive.
-            app_tag = "".join(
-                c if c.isalnum() else "_"
-                for c in spark.sparkContext.applicationId
-            )
-            _touch_heartbeat(_warehouse_path(spark), f"{name}__{app_tag}")
-            if not sweep_enabled:
-                continue
-            sweep_stale_bucketed(spark, name)
-        except Exception:
-            # best-effort GC: a failing registration (dead session,
-            # torn-down warehouse) is dropped, never re-raised
-            _BUCKETED_SWEEP.pop(memo_key, None)
-
-
-on_release(_sweep_registered_bucketed)
-
 
 #: session-scoped memo of hot_window_gate verdicts (same design and
 #: same immutable-inputs contract as _GATE_MEMO above; cleared by
@@ -520,265 +456,6 @@ def salted_candidates(
         .hint("SHUFFLE_HASH")
     )
     return p.join(b, [key, "__s"]).drop("__s")
-
-
-def auto_num_buckets(
-    df: DataFrame, target_bytes: int = 128 * 1024 * 1024
-) -> int:
-    """Size-derived bucket count: ``clamp(ceil(size / 128MB), 8, 4096)``.
-
-    A fixed bucket count is wrong at both ends of the scale: 16 buckets
-    over a 10 TB fact table is ~640 GB per bucket file (one task per
-    bucket on the bucketed read — unschedulable), while 4096 buckets
-    over a 100 MB dim is all file-open overhead. 128 MB per bucket is
-    the same sizing logic as ``spark.sql.files.maxPartitionBytes``. The
-    estimate is the optimizer's ``sizeInBytes`` (metadata only, no job);
-    it can overestimate post-filter, which errs toward MORE buckets —
-    the benign direction.
-
-    CO-BUCKETING CONTRACT: two tables joined via ``bucketed_join`` must
-    be written with the SAME count or the join re-shuffles — derive
-    from the LARGER side and pass that count explicitly to both writes.
-    """
-    try:
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return 16  # stats unavailable: the historical default
-    return max(8, min(4096, -(-size // target_bytes)))
-
-
-def write_cobucketed(
-    tables: "Sequence[tuple[DataFrame, str]]",
-    key: str,
-    num_buckets: int | None = None,
-) -> int:
-    """Write several tables bucketed on ``key`` with ONE shared count —
-    the co-bucketing contract ``bucketed_join`` needs for exchange-free
-    joins, packaged so callers cannot accidentally derive per-table
-    counts. ``num_buckets=None`` derives from the LARGEST side
-    (``auto_num_buckets``): the big side's bucket files are the ones
-    that must stay schedulable; the small side merely follows. Returns
-    the count used (callers persist it for later incremental writes —
-    appending with a different count would silently break co-location).
-    """
-    if not tables:
-        raise ValueError(
-            "write_cobucketed: tables must be non-empty "
-            "(ADVICE r14 — a bare max() error here was opaque)"
-        )
-    if num_buckets is None:
-        num_buckets = max(auto_num_buckets(df) for df, _ in tables)
-    for df, name in tables:
-        write_bucketed(df, name, key, num_buckets)
-    return num_buckets
-
-
-def write_bucketed(
-    df: DataFrame, table_name: str, key: str, num_buckets: int | None = None
-) -> None:
-    """Persist as a bucketed (+ sorted) table: join/groupBy on ``key``
-    can then reuse the on-disk hash partitioning.
-
-    ``num_buckets=None`` derives the count from the table's estimated
-    size (``auto_num_buckets``); co-bucketed pairs must share an
-    explicit count — see the contract note there.
-
-    Cross-process safety: the physical managed table (and hence its
-    warehouse directory) is suffixed with this process's applicationId,
-    so two processes sharing a warehouse never overwrite or delete each
-    other's files — the round-9 bench crash mode. ``table_name`` is
-    registered as a temp view over the physical table; views are plan
-    aliases, so the underlying scan keeps its bucketing metadata and
-    ``bucketed_join`` still plans exchange-free."""
-    if num_buckets is None:
-        num_buckets = auto_num_buckets(df)
-    spark = df.sparkSession
-    app_tag = "".join(
-        c if c.isalnum() else "_" for c in spark.sparkContext.applicationId
-    )
-    phys = f"{table_name}__{app_tag}"
-    import os
-    import shutil
-    from urllib.parse import urlparse
-
-    # applicationIds are process-unique: a leftover directory under the
-    # physical name can only be our own earlier write — safe to clear.
-    spark.sql(f"DROP TABLE IF EXISTS {phys}")
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    leftover = os.path.join(wh, phys)
-    if wh and os.path.isdir(leftover):
-        shutil.rmtree(leftover)
-    (
-        df.write.format("parquet")
-        .bucketBy(num_buckets, key)
-        .sortBy(key)
-        .mode("overwrite")
-        .saveAsTable(phys)
-    )
-    spark.table(phys).createOrReplaceTempView(table_name)
-    # liveness marker: a heartbeat file inside the physical dir, touched
-    # now and on every release_caches while this process lives; sibling
-    # sweeps key deletion on it instead of directory mtime (ADVICE r12)
-    _touch_heartbeat(wh, phys)
-    # lifecycle hook: release_caches refreshes our heartbeats and — only
-    # when SPARK_GRAFT_SWEEP_BUCKETED=1 — sweeps stale sibling dirs
-    _BUCKETED_SWEEP[(id(spark), table_name)] = spark
-
-
-def sweep_stale_bucketed(
-    spark: SparkSession, table_name: str, max_age_hours: float = 24.0
-) -> int:
-    """Best-effort GC for the per-process physical tables
-    ``write_bucketed`` leaves behind (ADVICE r10): each process writes
-    ``{table_name}__{applicationId}`` and only ever clears its OWN
-    name, so a long-lived shared warehouse accumulates one directory
-    per (logical table, process). This sweeps sibling directories of
-    ``table_name`` that are (a) not this process's own and (b) whose
-    liveness marker is older than ``max_age_hours``. Liveness is the
-    ``_SPARK_GRAFT_HEARTBEAT`` file the owning process touches at write
-    time and on each of its own ``release_caches`` calls — NOT the
-    directory mtime, because parquet reads never bump mtime and a
-    long-lived reader would look dead (ADVICE r12). Directories with no
-    heartbeat (pre-heartbeat writers) fall back to directory mtime.
-    Returns how many directories were removed.
-
-    Automatic invocation from ``caching.release_caches`` is opt-in via
-    ``SPARK_GRAFT_SWEEP_BUCKETED=1``; by default release_caches only
-    refreshes this process's own heartbeats and deletes nothing, so it
-    stays recompute-safe as documented. Call this function directly (or
-    set the env var) at a maintenance moment when no concurrent process
-    is mid-write on this warehouse. REQUIRED CADENCE for co-tenants of
-    a swept warehouse: any process holding bucketed tables alive must
-    refresh its heartbeats more often than every ``max_age_hours`` —
-    release_caches does it for all registered tables, and bucketed_join
-    does it for the tables it reads; a foreign process that does
-    neither within the window is indistinguishable from a dead one and
-    its directories WILL be reaped (its next scan fails loudly and a
-    retry re-derives — never silent corruption). Races lose benignly: an rmtree of a
-    directory a live process still reads fails that process's scan
-    loudly (retry re-derives), never silently corrupts, because
-    bucketed reads list files at plan time."""
-    import os
-    import shutil
-    import time
-    from urllib.parse import urlparse
-
-    app_tag = "".join(
-        c if c.isalnum() else "_" for c in spark.sparkContext.applicationId
-    )
-    own = f"{table_name}__{app_tag}"
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    if not wh or not os.path.isdir(wh):
-        return 0
-    cutoff = time.time() - max_age_hours * 3600.0
-    removed = 0
-    for entry in os.listdir(wh):
-        if not entry.startswith(f"{table_name}__") or entry == own:
-            continue
-        path = os.path.join(wh, entry)
-        try:
-            if not os.path.isdir(path):
-                continue
-            hb = os.path.join(path, _HEARTBEAT)
-            liveness = (
-                os.path.getmtime(hb)
-                if os.path.exists(hb)
-                else os.path.getmtime(path)
-            )
-            if liveness >= cutoff:
-                continue
-            shutil.rmtree(path)
-        except OSError:
-            continue  # raced with a concurrent sweep — someone got it
-        removed += 1
-        # Catalog drop is best-effort and per-entry isolated (ADVICE
-        # r11): a sibling directory with non-identifier characters
-        # (hyphen, dot — not something write_bucketed produces, but the
-        # listdir gives no guarantee) must not abort the sweep after
-        # its rmtree already ran. Backtick-quoting makes any directory
-        # name a legal identifier.
-        try:
-            spark.sql(f"DROP TABLE IF EXISTS `{entry.replace('`', '``')}`")
-        except Exception:
-            pass  # dir is gone; a stale catalog row loses benignly
-    return removed
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: str
-) -> DataFrame:
-    """Join two co-bucketed tables — plans with zero shuffle exchanges.
-
-    Also re-asserts this process's liveness on the tables it is about
-    to read: sweep liveness is a heartbeat file refreshed by
-    release_caches, and a long-lived process that READS but never
-    releases would otherwise look dead to a sibling's opt-in
-    ``SPARK_GRAFT_SWEEP_BUCKETED=1`` sweep after ``max_age_hours``
-    (ADVICE r13). The touch is two metadata writes per plan build —
-    invisible next to the scan it precedes.
-    """
-    for memo_key, sess in list(_BUCKETED_SWEEP.items()):
-        if sess is spark and memo_key[1] in (left_table, right_table):
-            try:
-                app_tag = "".join(
-                    c if c.isalnum() else "_"
-                    for c in spark.sparkContext.applicationId
-                )
-                _touch_heartbeat(
-                    _warehouse_path(spark), f"{memo_key[1]}__{app_tag}"
-                )
-            except Exception:
-                pass  # advisory, same contract as _touch_heartbeat
-    # Exchange-free-property guard (ADVICE r14 medium): since
-    # write_bucketed's default count became size-derived, two tables
-    # written separately with default args almost always get DIFFERENT
-    # counts, and Spark then silently plans a shuffle exchange — the
-    # property this API exists for degrades with no signal. Compare the
-    # catalog bucket specs and warn loudly on mismatch, pointing at
-    # write_cobucketed (warn, not raise: the join stays CORRECT, just
-    # no longer exchange-free).
-    try:
-        app_tag = "".join(
-            c if c.isalnum() else "_"
-            for c in spark.sparkContext.applicationId
-        )
-
-        def bucket_count(logical: str) -> int | None:
-            # write_bucketed registers `logical` as a temp view over the
-            # per-process physical table `logical__<app_tag>`; DESCRIBE
-            # on the view shows no bucket spec, so probe the physical
-            # name first and fall back to the logical one (a caller may
-            # pass a real catalog table directly).
-            for name in (f"{logical}__{app_tag}", logical):
-                try:
-                    for row in spark.sql(
-                        f"DESCRIBE TABLE EXTENDED `{name}`"
-                    ).collect():
-                        if row.col_name == "Num Buckets":
-                            return int(row.data_type)
-                except Exception:
-                    continue
-            return None
-
-        nl, nr = bucket_count(left_table), bucket_count(right_table)
-        if nl is not None and nr is not None and nl != nr:
-            counts = {left_table: nl, right_table: nr}
-            import warnings
-
-            warnings.warn(
-                f"bucketed_join({left_table!r}, {right_table!r}): bucket "
-                f"counts differ ({counts[left_table]} vs "
-                f"{counts[right_table]}) — the join will plan a shuffle "
-                "exchange. Write both sides with write_cobucketed (one "
-                "shared count) to keep the join exchange-free.",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-    except Exception:
-        pass  # diagnostics only; never block the join
-    return spark.table(left_table).join(spark.table(right_table), on)
 
 
 def key_skew_profile(df: DataFrame, key: str, top_k: int = 20) -> DataFrame:

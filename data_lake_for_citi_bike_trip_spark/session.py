@@ -20,6 +20,13 @@ driver's options, while a ``--driver-java-options`` in
 ``configure_runtime`` is idempotent and safe to call on a session we did
 not create (the driver hands us one); it only sets runtime-settable confs.
 Such a session keeps its own JVM: its page size and compiler policy.
+
+No session is handed out with the engine's Python data sources
+registered. Each query registers the format it reads or writes on the
+session it uses (``sources.pydatasource.register*``, which also pins that
+session active), as it must anyway for a session the driver hands us.
+The first registration in a process costs about 1.5 s on a 4-core host,
+so a process that uses none of these formats does not pay it.
 """
 
 from __future__ import annotations
@@ -256,18 +263,4 @@ def get_session(
         # Replaces a defaultJavaOptions from spark-defaults.conf.
         builder = builder.config("spark.driver.defaultJavaOptions", JIT_POLICY)
     spark = builder.getOrCreate()
-    # Register the engine's Python data sources up front so every session
-    # we hand out can read/write them without a per-query register call
-    # (per-query register remains idempotent and harmless). Lazy import:
-    # sources.registry imports this module.
-    try:
-        from .sources import pydatasource
-
-        pydatasource.register(spark)
-        pydatasource.register_stream(spark)
-        pydatasource.register_sink(spark)
-    except Exception:
-        # A deployment without the Python DataSource API (pre-4.0) still
-        # gets a working session for everything else.
-        pass
     return configure_runtime(spark)

@@ -68,8 +68,8 @@ on_release(_TS_SNIFF_MEMO.clear)
 
 #: (id(parent), shuffle_partitions, no_data_batches) -> (parent, clone).
 #: A drain session is defined entirely by its parent and its pinned
-#: conf, and every stream query used to pay newSession + configure +
-#: Python-data-source registration (~50 ms) to rebuild an identical
+#: conf, and every stream query used to pay newSession + configure to
+#: rebuild an identical
 #: clone — the r15 verdict's "shared long-lived drain session" (item
 #: 3). Isolation is unchanged: per-query state lives in the QUERY
 #: (fresh temp checkpoint dir + state store per start(); the memory
@@ -114,22 +114,6 @@ def scoped_session(
         return hit[1]
     clone = spark.newSession()
     configure_runtime(clone)
-    # Python data sources are registered PER SESSION (the clone's
-    # DataSourceManager starts empty), and configure_runtime just pinned
-    # the clone as the ACTIVE session — which is what format lookup
-    # consults (session.ensure_active). Register the engine's formats on
-    # the clone so (a) the drain itself can read synth_events_stream /
-    # write jsondir, and (b) a parent-side format lookup landing in the
-    # window where the clone is still active resolves instead of dying
-    # with DATA_SOURCE_NOT_FOUND.
-    try:
-        from ..sources import pydatasource
-
-        pydatasource.register(clone)
-        pydatasource.register_stream(clone)
-        pydatasource.register_sink(clone)
-    except Exception:
-        pass  # pre-4.0 deployment without the Python DataSource API
     if shuffle_partitions is not None:
         clone.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     if not no_data_batches:

@@ -1,10 +1,14 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+#: The checkout these tests belong to: its package is the one imported,
+#: wherever the suite is run from.
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from data_lake_for_citi_bike_trip_spark.session import get_session
 
@@ -13,75 +17,17 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_session("tests", master="local[4]", shuffle_partitions=4)
-    yield spark
-    _gc_own_warehouse_dirs(spark)
-
-
-def _gc_own_warehouse_dirs(spark) -> None:
-    """Session teardown GC (VERDICT r14 item 2): the bucketed-table
-    tests write per-process ``<name>__<app_tag>`` directories and plant
-    fake-sibling probe dirs in the persistent repo spark-warehouse;
-    without cleanup the warehouse accumulated 92 dirs across sessions
-    and planted probes aged into >24h time-bombs for later sweeps.
-    Remove this process's own dirs plus the test-planted probe names.
-    The shared ``partsupp_*`` canonical dirs are the intentional
-    cross-process reuse cache and must survive.
-
-    Planted-probe scoping (ADVICE r15): the probe names are FIXED
-    strings, so a CONCURRENT pytest process plants the same names —
-    unconditional removal here raced its heartbeat-protected probes
-    mid-test. Own-tag dirs are always removed; fixed-name planted dirs
-    are removed only when they fail the same staleness check
-    ``sweep_stale_bucketed`` uses (heartbeat file mtime, else dir
-    mtime, older than 24 h) — a live sibling's fresh probes survive,
-    and aged leftovers from crashed runs are still reaped (the sweep
-    tests' count assertions tolerate extra reaps since 2469b88)."""
-    import os
-    import shutil
-    import time
-    from urllib.parse import urlparse
-
-    from data_lake_for_citi_bike_trip_spark.operators.skew import _HEARTBEAT
-
-    try:
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        app_tag = "".join(
-            c if c.isalnum() else "_"
-            for c in spark.sparkContext.applicationId
-        )
-    except Exception:
-        return
-    if not wh or not os.path.isdir(wh):
-        return
-    planted = ("sweep_probe__", "sweep_lifecycle__")
-    cutoff = time.time() - 24 * 3600.0
-    for entry in os.listdir(wh):
-        own = entry.endswith(f"__{app_tag}")
-        if not (own or entry.startswith(planted)):
-            continue
-        path = os.path.join(wh, entry)
-        if not own:
-            try:
-                hb = os.path.join(path, _HEARTBEAT)
-                liveness = (
-                    os.path.getmtime(hb)
-                    if os.path.exists(hb)
-                    else os.path.getmtime(path)
-                )
-            except OSError:
-                continue  # raced — someone else removed it
-            if liveness >= cutoff:
-                continue  # fresh: a live sibling process may own it
-        try:
-            shutil.rmtree(path, ignore_errors=True)
-        except OSError:
-            pass
+    return get_session("tests", master="local[4]", shuffle_partitions=4)
 
 
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def repo_root():
+    return REPO_ROOT
 
 
 @pytest.fixture

@@ -71,34 +71,57 @@ def test_pysink_roundtrip_survives_clone_poison(spark, session_clone, tmp_path):
     assert back.count() == 7
 
 
-def test_get_session_preregisters_python_data_sources(spark):
-    """get_session registers synth_events / synth_events_stream / jsondir
-    up front — a session user can read the formats with no explicit
-    register call."""
-    sess = get_session("tests")  # returns the existing session, re-pinned
-    mgr = sess._jsparkSession.sessionState().dataSourceManager()
-    for fmt in ("synth_events", "synth_events_stream", "jsondir"):
-        assert mgr.dataSourceExists(fmt), fmt
-    n = (
-        sess.read.format("synth_events")
-        .option("rows", "100")
-        .option("parts", "4")
-        .load()
-        .count()
+def test_suite_imports_the_code_of_its_own_checkout(repo_root):
+    """A suite run from any checkout (a copy, a CI workspace) tests
+    that checkout's code, not the code at some fixed path."""
+    import __spark_entry__
+    import data_lake_for_citi_bike_trip_spark as pkg
+
+    assert os.path.dirname(os.path.abspath(pkg.__file__)) == os.path.join(
+        repo_root, "data_lake_for_citi_bike_trip_spark"
     )
-    assert n == 100
+    entry_dir = os.path.dirname(os.path.abspath(__spark_entry__.__file__))
+    assert entry_dir == repo_root
+
+
+def test_python_data_source_queries_match_oracle_in_a_fresh_session(
+    repo_root, sf_dir
+):
+    """A session from get_session registers no Python data source; each
+    of the three queries that use one registers it itself. In a fresh
+    process (where the first registration also pays its one-off cost)
+    all three must still produce the oracle's rows."""
+    out = subprocess.run(
+        [
+            sys.executable,
+            os.path.join(repo_root, "tools", "check_oracle.py"),
+            sf_dir,
+            "pysink_roundtrip",
+            "pysource_agg",
+            "pystream_agg",
+        ],
+        capture_output=True,
+        text=True,
+        timeout=600,
+        cwd=repo_root,
+    )
+    assert out.returncode == 0, out.stdout[-3000:] + out.stderr[-3000:]
+    for name in ("pysink_roundtrip", "pysource_agg", "pystream_agg"):
+        assert f" {name}: ok " in out.stdout, out.stdout
+    assert "ALL OK" in out.stdout
 
 
 def test_stream_drain_clone_keeps_python_sources_usable(spark, tmp_path):
     """The streaming audit from the same defect family: scoped_session
-    pins the clone active (configure_runtime) — the clone must carry
-    the engine's Python formats itself, and the parent must still
-    round-trip jsondir afterwards."""
+    pins the clone active (configure_runtime) — a format registered on
+    the clone must resolve there, and the parent must still round-trip
+    jsondir afterwards. Both register before use, as the queries do."""
     from data_lake_for_citi_bike_trip_spark.streaming import pipeline
 
     clone = pipeline.scoped_session(spark, shuffle_partitions=2)
     try:
-        # the clone can read the Python batch source directly
+        # the clone can read the Python batch source once it registers it
+        pydatasource.register(clone)
         n = (
             clone.read.format("synth_events")
             .option("rows", "50")
@@ -109,8 +132,9 @@ def test_stream_drain_clone_keeps_python_sources_usable(spark, tmp_path):
         assert n == 50
         # poison shape: createDataFrame on the clone pins it active
         clone.createDataFrame([(1,)], "x int").count()
-        # parent-side jsondir write still resolves (get_session
-        # pre-registered it; register_sink would also repin)
+        # parent-side jsondir write resolves: register_sink repins the
+        # parent over the poisoned clone
+        pydatasource.register_sink(spark)
         out = str(tmp_path / "sink")
         spark.range(3).selectExpr("id").write.format("jsondir").option(
             "path", out

@@ -1,4 +1,4 @@
-"""Skew salting + bucketed co-located join behavior."""
+"""Skew salting, skew-gate and heavy-hitter behavior."""
 
 from __future__ import annotations
 
@@ -21,30 +21,6 @@ def test_salted_join_matches_plain_join(spark, sf_dir):
     assert salted.where(F.col("label") != "hot").count() == 0
     # the join key actually includes the salt (scatter happened)
     assert "__salt" in executed_plan(skew.salted_join(skewed, dim, "k", "event_id", 8))
-
-
-def test_bucketed_join_has_no_shuffle(spark, sf_dir):
-    # managed tables land in ./spark-warehouse (gitignored); dropped below
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    skew.write_bucketed(orders, "b_orders", "o_custkey", 8)
-    skew.write_bucketed(
-        customer.withColumnRenamed("c_custkey", "o_custkey"), "b_customer", "o_custkey", 8
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ path
-    try:
-        joined = skew.bucketed_join(spark, "b_orders", "b_customer", "o_custkey")
-        plan = executed_plan(joined)
-        n = joined.count()
-        assert n == orders.join(
-            customer, orders.o_custkey == customer.c_custkey
-        ).count()
-        assert "Exchange hashpartitioning" not in plan, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_customer")
 
 
 def test_key_skew_profile_orders_and_shares(spark):
@@ -197,108 +173,3 @@ def test_salted_candidates_lazy_gate_no_jobs_and_identical(spark):
     assert sorted(lazy.columns) == sorted(plain.columns)
     diff = lazy.exceptAll(plain).count() + plain.exceptAll(lazy).count()
     assert diff == 0, f"{diff} mismatched candidate pairs"
-
-
-def test_auto_num_buckets_scales_with_size(spark, sf_dir):
-    """num_buckets=None derives clamp(ceil(size/128MB), 8, 4096) from
-    the optimizer's size estimate — floor at sf scale, proportional
-    growth once the estimate crosses the target, capped."""
-    from data_lake_for_citi_bike_trip_spark.operators.skew import (
-        auto_num_buckets,
-    )
-    from data_lake_for_citi_bike_trip_spark.sources.registry import load_table
-
-    small = load_table(spark, sf_dir, "nation")
-    assert auto_num_buckets(small) == 8  # floor: kilobytes of data
-    # force known sizes through the estimate by lowering the target
-    orders = load_table(spark, sf_dir, "orders")
-    est = int(
-        orders._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
-    assert auto_num_buckets(orders, target_bytes=est // 20) in range(8, 33)
-    assert auto_num_buckets(orders, target_bytes=1) == 4096  # cap
-
-
-def test_write_cobucketed_shares_one_count_and_joins_shuffle_free(
-    spark, sf_dir, tmp_path
-):
-    """write_cobucketed derives ONE count from the larger side and the
-    resulting join plans with zero shuffle exchanges."""
-    from data_lake_for_citi_bike_trip_spark.operators.skew import (
-        bucketed_join,
-        write_cobucketed,
-    )
-    from data_lake_for_citi_bike_trip_spark.sources.registry import load_table
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    ).withColumnRenamed("c_custkey", "o_custkey")
-    n = write_cobucketed(
-        [(orders, "cob_orders"), (cust, "cob_cust")], "o_custkey"
-    )
-    # set AFTER the loads: load_table's configure_runtime re-pins the
-    # broadcast threshold (same ordering note as the bloom-filter test)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        assert n >= 8
-        joined = bucketed_join(spark, "cob_orders", "cob_cust", "o_custkey")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan, plan
-        assert joined.count() == orders.join(cust, "o_custkey").count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS cob_orders")
-        spark.sql("DROP TABLE IF EXISTS cob_cust")
-
-
-def test_bucketed_join_warns_on_mismatched_counts(spark, sf_dir):
-    """ADVICE r14: since write_bucketed's default count became
-    size-derived, two independently written tables can silently lose
-    the exchange-free property. bucketed_join must warn on a bucket
-    count mismatch (and stay silent on a co-bucketed pair)."""
-    import warnings
-
-    from data_lake_for_citi_bike_trip_spark.operators.skew import (
-        bucketed_join,
-        write_bucketed,
-        write_cobucketed,
-    )
-
-    a = spark.range(100).selectExpr("id AS k", "id * 2 AS va")
-    b = spark.range(100).selectExpr("id AS k", "id * 3 AS vb")
-    write_bucketed(a, "mismatch_a", "k", num_buckets=4)
-    write_bucketed(b, "mismatch_b", "k", num_buckets=8)
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        out = bucketed_join(spark, "mismatch_a", "mismatch_b", "k")
-        assert out.count() == 100
-    assert any(
-        "bucket" in str(x.message) and "exchange" in str(x.message)
-        for x in w
-    ), [str(x.message) for x in w]
-
-    # co-bucketed pair: no warning
-    n = write_cobucketed(
-        [(a, "match_a"), (b, "match_b")], "k", num_buckets=4
-    )
-    assert n == 4
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        out = bucketed_join(spark, "match_a", "match_b", "k")
-        assert out.count() == 100
-    assert not [x for x in w if "bucket counts differ" in str(x.message)]
-
-
-def test_write_cobucketed_empty_tables_raises(spark):
-    import pytest as _pytest
-
-    from data_lake_for_citi_bike_trip_spark.operators.skew import (
-        write_cobucketed,
-    )
-
-    with _pytest.raises(ValueError, match="non-empty"):
-        write_cobucketed([], "k")

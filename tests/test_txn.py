@@ -403,7 +403,7 @@ spark.stop()
 """
 
 
-def test_parallel_driver_processes_race_merge_exactly_once(tmp_path):
+def test_parallel_driver_processes_race_merge_exactly_once(tmp_path, repo_root):
     """Two INDEPENDENT Spark driver processes race merge() on one
     table: the exclusive-link publish must let exactly one writer win
     each version, the loser must retry onto the next version, and the
@@ -425,7 +425,7 @@ def test_parallel_driver_processes_race_merge_exactly_once(tmp_path):
     script = tmp_path / "racer.py"
     script.write_text(_RACER)
     start_at = _time.time() + 25  # both JVMs must be up before the race
-    env = dict(os.environ, PYTHONPATH="/root/repo")
+    env = dict(os.environ, PYTHONPATH=repo_root)
     procs = [
         subprocess.Popen(
             [sys.executable, str(script), root, str(i), str(start_at)],
@@ -433,7 +433,7 @@ def test_parallel_driver_processes_race_merge_exactly_once(tmp_path):
             stderr=subprocess.DEVNULL,
             text=True,
             env=env,
-            cwd="/root/repo",
+            cwd=repo_root,
         )
         for i in (1, 2)
     ]

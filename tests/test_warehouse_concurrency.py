@@ -68,9 +68,11 @@ def test_race_losing_builder_leaves_canonical_untouched(spark, sf_dir):
     assert not os.path.isdir(os.path.join(wh, f"{tbl}__{app_tag}"))
 
 
+# argv: app name, sf dir, checkout. Children inherit this process's cwd,
+# so they share its spark-warehouse.
 _CHILD = """
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[3])
 from data_lake_for_citi_bike_trip_spark.session import get_session
 from data_lake_for_citi_bike_trip_spark.operators import sqlsurface
 spark = get_session(sys.argv[1], master="local[2]", shuffle_partitions=2)
@@ -81,7 +83,9 @@ spark.stop()
 """
 
 
-def test_two_concurrent_processes_build_and_read(spark, sf_dir, tmp_path):
+def test_two_concurrent_processes_build_and_read(
+    spark, sf_dir, tmp_path, repo_root
+):
     """Two separate JVM processes race to materialize the same canonical
     table from scratch; both must finish green with identical counts
     (one wins the rename, the other reuses). Uses sf0.001 so the two
@@ -101,11 +105,10 @@ def test_two_concurrent_processes_build_and_read(spark, sf_dir, tmp_path):
 
     procs = [
         subprocess.Popen(
-            [sys.executable, "-c", _CHILD, f"race{i}", sf_dir],
+            [sys.executable, "-c", _CHILD, f"race{i}", sf_dir, repo_root],
             stdout=subprocess.PIPE,
             stderr=subprocess.PIPE,
             text=True,
-            cwd="/root/repo",
         )
         for i in range(2)
     ]
@@ -120,109 +123,3 @@ def test_two_concurrent_processes_build_and_read(spark, sf_dir, tmp_path):
     # and this (third) process can reuse what they published
     assert sqlsurface.ensure_partsupp(spark, sf_dir) == tbl
     assert spark.table(tbl).count() == int(results[0][2])
-
-
-def test_sweep_stale_bucketed_removes_only_old_foreign_dirs(spark, tmp_path):
-    """ADVICE r10: the per-process bucketed-table directories need a GC
-    path. The sweep must remove a stale foreign directory, keep a fresh
-    foreign one, and never touch this process's own."""
-    import os
-    import time
-    from urllib.parse import urlparse
-
-    from data_lake_for_citi_bike_trip_spark.operators.skew import (
-        sweep_stale_bucketed,
-        write_bucketed,
-    )
-
-    df = spark.range(10).selectExpr("id", "id % 3 AS k")
-    write_bucketed(df, "sweep_probe", "k", num_buckets=2)
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    app_tag = "".join(
-        c if c.isalnum() else "_" for c in spark.sparkContext.applicationId
-    )
-    own = os.path.join(wh, f"sweep_probe__{app_tag}")
-    assert os.path.isdir(own)
-    stale = os.path.join(wh, "sweep_probe__app_dead_process")
-    fresh = os.path.join(wh, "sweep_probe__app_live_process")
-    os.makedirs(stale, exist_ok=True)
-    os.makedirs(fresh, exist_ok=True)
-    two_days_ago = time.time() - 48 * 3600
-    os.utime(stale, (two_days_ago, two_days_ago))
-    # ADVICE r12: liveness is the heartbeat file, not directory mtime —
-    # a stale-looking dir whose owner still heartbeats must survive.
-    beating = os.path.join(wh, "sweep_probe__app_old_but_alive")
-    os.makedirs(beating, exist_ok=True)
-    from data_lake_for_citi_bike_trip_spark.operators import skew
-
-    skew._touch_heartbeat(wh, "sweep_probe__app_old_but_alive")
-    os.utime(beating, (two_days_ago, two_days_ago))  # dir looks dead
-    removed = sweep_stale_bucketed(spark, "sweep_probe", max_age_hours=24)
-    # >= 1, not == 1: the sweep counts EVERY reaped sweep_probe__* dir,
-    # and a shared persistent warehouse can hold >24h-old leftovers from
-    # previous pytest sessions (the r14 verdict reproduced exactly that:
-    # a leftover aged past the boundary and the correct reap made the
-    # global count 2). The planted-dir assertions below are the actual
-    # contract: stale gone, fresh + beating + own kept.
-    assert removed >= 1
-    assert not os.path.exists(stale)
-    assert os.path.isdir(fresh)
-    assert os.path.isdir(beating), "fresh heartbeat did not protect dir"
-    assert os.path.isdir(own)
-    # the logical view still reads: the sweep never broke our own table
-    assert spark.table("sweep_probe").count() == 10
-
-
-def test_release_caches_sweeps_registered_bucketed(spark, monkeypatch):
-    """VERDICT r11 item 3 + ADVICE r12: the lifecycle sweep exists but
-    deletion is opt-in. By default caching.release_caches must delete
-    NOTHING (it only refreshes this process's own heartbeats — it is
-    documented recompute-safe); with SPARK_GRAFT_SWEEP_BUCKETED=1 it
-    reaps stale foreign directories. Also pins the ADVICE r11 quoting
-    fix: a sibling directory with non-identifier characters (hyphen)
-    must be swept, not abort the loop with a ParseException."""
-    import os
-    import time
-    from urllib.parse import urlparse
-
-    from data_lake_for_citi_bike_trip_spark import caching
-    from data_lake_for_citi_bike_trip_spark.operators.skew import (
-        _HEARTBEAT,
-        write_bucketed,
-    )
-
-    df = spark.range(12).selectExpr("id", "id % 4 AS k")
-    write_bucketed(df, "sweep_lifecycle", "k", num_buckets=2)
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    app_tag = "".join(
-        c if c.isalnum() else "_" for c in spark.sparkContext.applicationId
-    )
-    own_hb = os.path.join(wh, f"sweep_lifecycle__{app_tag}", _HEARTBEAT)
-    assert os.path.exists(own_hb), "write_bucketed did not drop heartbeat"
-    stale = os.path.join(wh, "sweep_lifecycle__app_dead_process")
-    weird = os.path.join(wh, "sweep_lifecycle__app-with-hyphen.dot")
-    os.makedirs(stale, exist_ok=True)
-    os.makedirs(weird, exist_ok=True)
-    two_days_ago = time.time() - 48 * 3600
-    os.utime(stale, (two_days_ago, two_days_ago))
-    os.utime(weird, (two_days_ago, two_days_ago))
-
-    # Default (no opt-in): release_caches deletes nothing, but must
-    # refresh our own heartbeat so sibling sweeps see us alive.
-    monkeypatch.delenv("SPARK_GRAFT_SWEEP_BUCKETED", raising=False)
-    os.utime(own_hb, (two_days_ago, two_days_ago))
-    caching.release_caches()
-    assert os.path.exists(stale), "default release_caches deleted files"
-    assert os.path.exists(weird), "default release_caches deleted files"
-    assert os.path.getmtime(own_hb) > two_days_ago + 3600, (
-        "release_caches did not refresh own heartbeat"
-    )
-
-    # Opt-in: the stale foreign dirs are reaped.
-    write_bucketed(df, "sweep_lifecycle", "k", num_buckets=2)  # re-register
-    monkeypatch.setenv("SPARK_GRAFT_SWEEP_BUCKETED", "1")
-    caching.release_caches()
-    assert not os.path.exists(stale), "lifecycle release did not sweep"
-    assert not os.path.exists(weird), "non-identifier dir aborted sweep"
-    # our own table survives and still reads
-    assert spark.table("sweep_lifecycle").count() == 12

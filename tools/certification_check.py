@@ -30,7 +30,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 

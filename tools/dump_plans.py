@@ -5,9 +5,11 @@ Usage: python tools/dump_plans.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 HEADLINE = [
     "fact_trips",
@@ -681,7 +683,7 @@ def main() -> None:
         "```",
         "",
     ]
-    with open("/root/repo/PLANS.md", "w") as out:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as out:
         out.write("\n".join(lines))
     print("wrote PLANS.md")
 

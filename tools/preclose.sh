@@ -1,11 +1,11 @@
 #!/bin/bash
 # Standing pre-close checklist (VERDICT r7 item 6, operationalized).
-# Run from /root/repo before ending a round; every gate must pass on
-# the FINAL surface. Writes the round-close artifacts the next judge
-# reads. Usage: bash tools/preclose.sh r8
+# Run before ending a round, in the checkout that holds this script;
+# every gate must pass on the FINAL surface. Writes the round-close
+# artifacts the next judge reads. Usage: bash tools/preclose.sh r8
 set -u
 TAG="${1:?usage: preclose.sh <round-tag, e.g. r8>}"
-cd /root/repo
+cd "$(dirname "$0")/.."
 fail=0
 
 step() { echo; echo "=== $1 ==="; }

@@ -16,10 +16,12 @@ Usage::
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 #: default soak set: every family with nontrivial join/window/UDF structure
 DEFAULT = [

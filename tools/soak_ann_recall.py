@@ -42,8 +42,9 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 BITS = 16
 WHALE_N = 5000
@@ -54,7 +55,7 @@ def corpus(spark, out_root: str, total: int, whale_n: int):
     if not os.path.exists(os.path.join(out, "embeddings.parquet")):
         os.makedirs(out, exist_ok=True)
         subprocess.run(
-            [sys.executable, "/root/repo/tools/make_whale_vectors.py",
+            [sys.executable, os.path.join(REPO, "tools", "make_whale_vectors.py"),
              out, str(whale_n), str(total - whale_n)],
             check=True,
         )
