@@ -20,6 +20,23 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# Tiered repeats (BENCH_NOTES.md "noise pinning"): single runs carry 2-4x
+# box noise; the minimum over repeats is the stable estimate of a query's
+# intrinsic cost, and the slower the query the more a single noisy run
+# distorts the board. tools/bench_band.py bands this warm min. Tiers:
+#   first run < FAST_CUTOFF_S            -> 1 run (fixed job-submission
+#       overhead dominates; repeats add wall-clock without signal)
+#   first run < SLOW_CUTOFF_S            -> min of ITERATIONS runs
+#   first run >= SLOW_CUTOFF_S           -> min of SLOW_ITERATIONS runs,
+#       while EXTRA_BUDGET_S lasts — the extra 4th/5th runs consume the
+#       budget, bounding the added wall-clock no matter how many queries
+#       land in the slow tier.
+ITERATIONS = 3
+SLOW_ITERATIONS = 5
+FAST_CUTOFF_S = 1.0
+SLOW_CUTOFF_S = 2.0
+EXTRA_BUDGET_S = 240.0
+
 
 def load_band(path: str, sf, cpus: int) -> dict:
     """Per-query band from ``path`` (tools/bench_band.py), or ``{}``
@@ -50,22 +67,7 @@ def main() -> None:
     # Warm the JVM/codegen paths so query 1 doesn't pay session startup.
     spark.range(1000).selectExpr("sum(id)").collect()
 
-    # Tiered repeats (BENCH_NOTES.md "noise pinning", VERDICT r09 item 6):
-    # single runs carry 2-4x box noise; the minimum over repeats is the
-    # stable estimate of a query's intrinsic cost, and the slower the
-    # query the more a single noisy run distorts the board. Tiers:
-    #   first run < BENCH_FAST_CUTOFF (1 s)  -> 1 run (fixed job-submission
-    #       overhead dominates; repeats add wall-clock without signal)
-    #   first run < BENCH_SLOW_CUTOFF (2 s)  -> min-of-BENCH_ITERATIONS (3)
-    #   first run >= BENCH_SLOW_CUTOFF       -> min-of-BENCH_SLOW_ITERATIONS
-    #       (5), while BENCH_EXTRA_BUDGET (240 s total) lasts — the extra
-    #       4th/5th runs consume the budget, bounding the added wall-clock
-    #       no matter how many queries land in the slow tier.
-    iterations = int(os.environ.get("BENCH_ITERATIONS", "3"))
-    slow_iterations = int(os.environ.get("BENCH_SLOW_ITERATIONS", "5"))
-    fast_cutoff = float(os.environ.get("BENCH_FAST_CUTOFF", "1.0"))
-    slow_cutoff = float(os.environ.get("BENCH_SLOW_CUTOFF", "2.0"))
-    extra_budget = float(os.environ.get("BENCH_EXTRA_BUDGET", "240"))
+    extra_budget = EXTRA_BUDGET_S
     timings: dict[str, float] = {}
     medians: dict[str, float] = {}
 
@@ -92,18 +94,18 @@ def main() -> None:
 
     for name, fn in entrymod.queries().items():
         runs: list[float] = []
-        target = iterations
+        target = ITERATIONS
         _drop_data_caches()
         while len(runs) < target:
             t0 = time.perf_counter()
             fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
             runs.append(time.perf_counter() - t0)
             if len(runs) == 1:
-                if runs[0] < fast_cutoff:
+                if runs[0] < FAST_CUTOFF_S:
                     break
-                if runs[0] >= slow_cutoff and extra_budget > 0:
-                    target = slow_iterations
-            elif len(runs) > iterations:
+                if runs[0] >= SLOW_CUTOFF_S and extra_budget > 0:
+                    target = SLOW_ITERATIONS
+            elif len(runs) > ITERATIONS:
                 extra_budget -= runs[-1]
                 if extra_budget <= 0:
                     break
@@ -122,7 +124,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "iterations": iterations,
+        "iterations": ITERATIONS,
         "queries_median": medians,
         # r16 methodology additions (additions-only; see the cold-start
         # comment above): first run of each query = cold end-to-end

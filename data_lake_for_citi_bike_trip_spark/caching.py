@@ -54,7 +54,7 @@ def register(df: DataFrame) -> DataFrame:
     return df
 
 
-def release_data_caches(blocking: bool = False) -> int:
+def release_data_caches() -> int:
     """Unpersist every registered DataFrame; returns how many.
 
     Keeps the :func:`on_release` memos (load_table handles, ts-sniff
@@ -65,21 +65,21 @@ def release_data_caches(blocking: bool = False) -> int:
     while _REGISTRY:
         df = _REGISTRY.pop()
         try:
-            df.unpersist(blocking)
+            df.unpersist()
         except Exception:
             pass  # session already stopped — nothing to release
         n += 1
     return n
 
 
-def release_caches(blocking: bool = False) -> int:
+def release_caches() -> int:
     """Unpersist every registered DataFrame and clear the
     :func:`on_release` memos; returns how many DataFrames dropped.
 
     Call only when no DataFrame previously returned by an operator will
     be executed again (re-execution after release is still CORRECT —
     Spark recomputes from source — just no longer cached)."""
-    n = release_data_caches(blocking)
+    n = release_data_caches()
     for cb in _RELEASE_CALLBACKS:
         try:
             cb()

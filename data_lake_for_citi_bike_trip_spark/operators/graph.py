@@ -12,12 +12,12 @@ operands (Spark ``div`` truncates toward zero, DuckDB ``//`` floors —
 they agree on non-negative values, same discipline as oracles.py), and
 the iteration count is fixed — the oracle unrolls the same arithmetic.
 
-Scale notes (100 TB): one iteration = one hash join of ranks onto the
-edge list (both keyed on ``src`` — co-partitioned after the first
-shuffle) + one aggregate keyed on ``dst``. Edge list and out-degrees are
-computed once and cached. Plans grow linearly with iterations; a long
-run (>~10 iters) should localCheckpoint every few iterations to cut
-lineage, exactly like ``connected_components`` does.
+Scale notes (100 TB): one iteration = one broadcast of the rank vector
+onto the cached edge list (keyed on ``src``) + one aggregate keyed on
+``dst``. Edge list and out-degrees are computed once and cached. Plans
+grow linearly with iterations; a long run (>~10 iters) should
+localCheckpoint every few iterations to cut lineage, exactly like
+``connected_components`` does.
 """
 
 from __future__ import annotations
@@ -37,7 +37,6 @@ def pagerank(
     edges: DataFrame,
     iters: int = 3,
     damping_pct: int = 85,
-    broadcast_ranks: bool = True,
 ) -> DataFrame:
     """Fixed-iteration integer PageRank.
 
@@ -52,13 +51,10 @@ def pagerank(
     dropped, the standard simplification — documented rather than
     redistributed so the oracle stays a pure unrolled aggregate.
 
-    ``broadcast_ranks=True`` ships the rank vector (one row per node —
-    the Pregel vertex state, orders of magnitude smaller than the edge
-    list) to the cached edge partitions each iteration, so the only
-    shuffle per step is the contribution aggregate on ``dst``. Set it
-    False when the node set itself is too large to broadcast — the join
-    then co-partitions both sides on ``src`` (two shuffles per step, the
-    classic BSP shape).
+    Each iteration broadcasts the rank vector (one row per node — the
+    Pregel vertex state, orders of magnitude smaller than the edge list)
+    to the cached edge partitions, so the only shuffle per step is the
+    contribution aggregate on ``dst``.
 
     Returns (id, rank_e6).
     """
@@ -78,9 +74,7 @@ def pagerank(
         "id", F.lit(RANK_SCALE).cast("long").alias("rank_e6")
     )
     for _ in range(iters):
-        rank_side = ranks.select(F.col("id").alias("src"), "rank_e6")
-        if broadcast_ranks:
-            rank_side = F.broadcast(rank_side)
+        rank_side = F.broadcast(ranks.select(F.col("id").alias("src"), "rank_e6"))
         contribs = (
             contrib_edges.join(rank_side, "src")
             .select("dst", F.expr("rank_e6 div outdeg").alias("c"))

@@ -13,10 +13,9 @@ Design (the part that matters at 100 TB):
 Codecs: PIL/librosa/ffmpeg are NOT in this container, but uncompressed
 BMP and PPM are parseable with the stdlib alone — so the DEFAULT
 ('real') decoder genuinely decodes those formats end-to-end (see
-``decode_bmp`` / ``decode_ppm`` / ``sniff_decode``), and the default
-resizer does real nearest-neighbor resampling of BMP pixels via numpy.
-Formats that need external codecs still raise NotImplementedError; the
-registry lets deployments plug them in.
+``decode_bmp`` / ``decode_ppm`` / ``sniff_decode``). Formats that need
+external codecs still raise NotImplementedError; the decoder registry
+lets deployments plug them in.
 """
 
 from __future__ import annotations
@@ -221,136 +220,6 @@ def payload_stats(media_source_docs: DataFrame, chunk_bytes: int = 256) -> DataF
         F.expr(f"(octet_length(text) + {chunk_bytes - 1}) div {chunk_bytes}").alias(
             "n_chunks"
         ),
-    )
-
-
-#: Output schema of the resize stage.
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("resized", T.BinaryType()),
-    ]
-)
-
-#: Output schema of video frame sampling (one row per sampled frame).
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_no", T.IntegerType()),
-        T.StructField("frame_bytes", T.BinaryType()),
-    ]
-)
-
-_RESIZERS: dict[str, Callable[[bytes, int, int], bytes]] = {}
-_FRAMERS: dict[str, Callable[[bytes, int], list[bytes]]] = {}
-
-
-def register_resizer(name: str, fn: Callable[[bytes, int, int], bytes]) -> None:
-    _RESIZERS[name] = fn
-
-
-def register_framer(name: str, fn: Callable[[bytes, int], list[bytes]]) -> None:
-    _FRAMERS[name] = fn
-
-
-def resize_bmp(raw: bytes, width: int, height: int) -> bytes:
-    """Real nearest-neighbor resample of a 24-bit uncompressed BMP
-    (numpy, vectorized index maps) re-encoded as BMP. Stdlib+numpy only."""
-    import struct
-
-    import numpy as np
-
-    w, h, c = decode_bmp(raw)
-    if c != 3:
-        raise ValueError("resize_bmp handles 24-bit BMPs only")
-    offset = struct.unpack_from("<I", raw, 10)[0]
-    row_size = ((w * 3 + 3) // 4) * 4
-    px = np.frombuffer(raw, dtype=np.uint8, count=row_size * h, offset=offset)
-    px = px.reshape(h, row_size)[:, : w * 3].reshape(h, w, 3)
-    ys = (np.arange(height) * h) // height
-    xs = (np.arange(width) * w) // width
-    out = px[ys][:, xs]
-    out_row = ((width * 3 + 3) // 4) * 4
-    padded = np.zeros((height, out_row), dtype=np.uint8)
-    padded[:, : width * 3] = out.reshape(height, width * 3)
-    data = padded.tobytes()
-    header = bytearray(raw[:54])
-    struct.pack_into("<I", header, 2, 54 + len(data))
-    struct.pack_into("<I", header, 10, 54)
-    struct.pack_into("<i", header, 18, width)
-    struct.pack_into("<i", header, 22, height)
-    struct.pack_into("<I", header, 34, len(data))
-    return bytes(header) + data
-
-
-_RESIZERS.update({"bmp": resize_bmp, "real": resize_bmp})
-
-
-def resize_images(
-    media: DataFrame, width: int, height: int, resizer: str = "real"
-) -> DataFrame:
-    """Arrow-batched resize. Same plumbing rules as decode: the codec
-    callable is resolved DRIVER-side and ships in the closure; payloads
-    cross the JVM boundary once per Arrow batch. The default resizer is
-    a REAL BMP nearest-neighbor resampler; other formats need a
-    registered codec."""
-    if resizer not in _RESIZERS:
-        raise NotImplementedError(
-            f"resizer '{resizer}' not registered; install a codec and call "
-            "register_resizer(), or register a fake for tests"
-        )
-    fn = _RESIZERS[resizer]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = [
-                (int(mid), width, height, fn(bytes(payload), width, height))
-                for mid, payload in zip(pdf["media_id"], pdf["payload"])
-            ]
-            yield pd.DataFrame(
-                out, columns=[f.name for f in RESIZED_SCHEMA.fields]
-            )
-
-    return (
-        media.select("media_id", "payload")
-        # a NULL payload (missing/corrupt blob) has nothing to decode;
-        # dropping it JVM-side keeps bytes(None) out of the batch loop
-        .where(F.col("payload").isNotNull())
-        .mapInPandas(batches, schema=RESIZED_SCHEMA)
-    )
-
-
-def sample_frames(
-    media: DataFrame, every_nth: int = 10, framer: str = "real"
-) -> DataFrame:
-    """Video frame sampling: one output row per kept frame (a flatMap
-    shape — mapInPandas yields more rows than it consumes)."""
-    if framer not in _FRAMERS:
-        # STUB: real demuxing needs ffmpeg/pyav, absent in this container.
-        raise NotImplementedError(
-            f"framer '{framer}' not registered; install a codec and call "
-            "register_framer(), or register a fake for tests"
-        )
-    fn = _FRAMERS[framer]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                for i, frame in enumerate(fn(bytes(payload), every_nth)):
-                    rows.append((int(mid), i, frame))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in FRAME_SCHEMA.fields]
-            )
-
-    return (
-        media.select("media_id", "payload")
-        # a NULL payload (missing/corrupt blob) has nothing to decode;
-        # dropping it JVM-side keeps bytes(None) out of the batch loop
-        .where(F.col("payload").isNotNull())
-        .mapInPandas(batches, schema=FRAME_SCHEMA)
     )
 
 

@@ -316,52 +316,6 @@ def ivf_topk(
     return ivf_search(IVFIndex(centroids, index), queries, k=k, nprobe=nprobe)
 
 
-# ---------------------------------------------------------------------------
-# pandas_udf alternative scoring path: Arrow-batched, numpy-vectorized.
-# The built-in-expression path above is the default (stays in codegen);
-# this exists for workloads where the scoring function outgrows SQL
-# expressions (learned metrics, quantized dot products). BLAS summation
-# order differs from the expression left-fold in the last float bits, so
-# this path is validated against the expression path with a tolerance,
-# not hashed against the SQL oracle.
-# ---------------------------------------------------------------------------
-
-
-def cosine_topk_pandas(
-    embeddings: DataFrame, queries: DataFrame, k: int = 10
-) -> DataFrame:
-    """Brute-force top-k with the cosine computed in a vectorized
-    pandas_udf over Arrow batches (numpy dot per batch)."""
-    # NB: module uses `from __future__ import annotations`, so the udf's
-    # type hints are strings — pandas/numpy must be resolvable in module
-    # globals for pyspark's signature inference.
-    global np, pd
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        va = np.stack(a.to_numpy())
-        vb = np.stack(b.to_numpy())
-        dots = np.einsum("ij,ij->i", va, vb)
-        na = np.linalg.norm(va, axis=1)
-        nb = np.linalg.norm(vb, axis=1)
-        return pd.Series(np.round(dots / (na * nb), 6))
-
-    corpus = _prepared(embeddings)
-    q = _prepared(queries).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
-    )
-    scored = corpus.join(F.broadcast(q), F.col("vec_id") != F.col("q_id")).select(
-        "q_id", "vec_id", cos(F.col("qv"), F.col("v")).alias("cos_sim")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w).cast("bigint")).where(
-        F.col("rank") <= k
-    )
-
-
 def knn_graph(embeddings: DataFrame, k: int = 5) -> DataFrame:
     """Exact k-nearest-neighbor GRAPH: for every vector, its top-k
     neighbors by cosine — the all-sources generalization of

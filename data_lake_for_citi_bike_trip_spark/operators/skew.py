@@ -158,7 +158,6 @@ def salted_candidates(
     salt: int = 16,
     whale_min: int = 256,
     broadcast_bytes: int = 256 << 20,
-    eager_gate: bool = True,
 ) -> DataFrame:
     """Inner equi-join on ``key`` whose pair EMISSION stays parallel
     when one key value is hot — the candidate-generation primitive for
@@ -238,54 +237,6 @@ def salted_candidates(
     else:
         id_cols = [F.col(c) for c in probe_id]
     pair_min = whale_min * whale_min
-    if not eager_gate:
-        # LAZY path (ADVICE r11): no jobs at plan CONSTRUCTION — for
-        # explain-only / plan-dump / interactive plan-building callers.
-        # Skips the counting gate and the measured-bytes strategy
-        # chooser; the per-key stats join stays IN the plan (uncached)
-        # and every key takes the wide-salt shape conditionally via the
-        # in-plan pair-count factor. Safe at any build size; costs the
-        # stats subquery per execution and forgoes the no-whale plain
-        # join and the broadcast fast path — eager_gate=True remains
-        # the execution-path default.
-        try:
-            lazy_nparts = int(
-                probe.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            )
-        except (TypeError, ValueError):
-            lazy_nparts = probe.sparkSession.sparkContext.defaultParallelism
-        lazy_kstats = (
-            build.groupBy(key)
-            .agg(F.count(F.lit(1)).alias("__bn"))
-            .join(
-                probe.groupBy(key).agg(F.count(F.lit(1)).alias("__pn")),
-                key,
-            )
-            .select(
-                key, "__bn", (F.col("__pn") * F.col("__bn")).alias("__pairs")
-            )
-        )
-        wide = max(salt, 4 * lazy_nparts)
-        lazy_factor = F.when(
-            F.col("__pairs") >= pair_min, F.lit(wide)
-        ).otherwise(F.lit(1))
-        lp = (
-            probe.join(lazy_kstats, key)
-            .withColumn("__s", F.pmod(F.xxhash64(*id_cols), lazy_factor))
-            .drop("__bn", "__pairs")
-            .repartition(lazy_nparts, F.col(key), F.col("__s"))
-        )
-        lb = (
-            build.join(lazy_kstats, key)
-            .withColumn(
-                "__s",
-                F.explode(F.sequence(F.lit(0), lazy_factor - F.lit(1))),
-            )
-            .drop("__bn", "__pairs")
-            .repartition(lazy_nparts, F.col(key), F.col("__s"))
-            .hint("SHUFFLE_HASH")
-        )
-        return lp.join(lb, [key, "__s"]).drop("__s")
     try:
         memo_key = (
             id(probe.sparkSession),

@@ -12,9 +12,7 @@ Divergences from the reference (each deliberate, SURVEY.md §2.12):
 - fact/time-dim incremental loads use dynamic partition overwrite instead
   of blind append (rerun idempotency — bug #4).
 - no global ORDER BY before partitioned writes: file order is not a
-  query-visible property and the range exchange is wasted work at scale;
-  ``sort_within_partitions=True`` restores row order *inside* files for
-  encoding locality if wanted.
+  query-visible property and the range exchange is wasted work at scale.
 - ``legacy_string_mode=True`` reproduces the reference's all-string CSV
   runtime types (no inferSchema — SURVEY.md §1.3) including lexicographic
   ``ORDER BY bike_id``; the default is typed schemas so filters push down.
@@ -206,7 +204,6 @@ def run_elt(
     output_root: str,
     *,
     legacy_string_mode: bool = False,
-    sort_within_partitions: bool = False,
     metrics: dict | None = None,
 ) -> dict[str, DataFrame]:
     """Full ELT: staging reads -> 7 tables -> partitioned parquet writes
@@ -239,9 +236,6 @@ def run_elt(
     observations: dict[str, Observation] = {}
     for name, df in tables.items():
         partition_by, mode = schemas.OUTPUT_LAYOUT[name]
-        out = df
-        if sort_within_partitions and name == "bikeshare_fact_table":
-            out = out.sortWithinPartitions("start_time")
         if metrics is not None:
             obs = Observation(name)
             exprs = [F.count(F.lit(1)).alias("rows")]
@@ -249,10 +243,10 @@ def run_elt(
                 exprs.append(
                     F.sum(F.col("id").isNull().cast("long")).alias("null_ids")
                 )
-            out = out.observe(obs, *exprs)
+            df = df.observe(obs, *exprs)
             observations[name] = obs
         write_table(
-            out, os.path.join(output_root, name), partition_by=partition_by, mode=mode
+            df, os.path.join(output_root, name), partition_by=partition_by, mode=mode
         )
     if metrics is not None:
         for name, obs in observations.items():

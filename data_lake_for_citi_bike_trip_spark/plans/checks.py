@@ -142,21 +142,3 @@ def observed_write(
         action(observed)
     return obs.get
 
-
-def assert_observed(
-    df: DataFrame,
-    checks: list[Check],
-    action: Callable[[DataFrame], None] | None = None,
-) -> list[tuple[str, object, bool]]:
-    """run_checks, but piggybacked on ONE pass of ``df`` via observe —
-    every check's aggregate must be over ``df`` itself (the per-check
-    ``df`` attribute is ignored). Raises on failure like run_checks."""
-    got = observed_write(df, {c.name: c.agg for c in checks}, action)
-    results = [
-        (c.name, got[c.name], bool(c.comparison(got[c.name], c.expected)))
-        for c in checks
-    ]
-    failures = [r for r in results if not r[2]]
-    if failures:
-        raise ValueError(f"observed data-quality check failures: {failures}")
-    return results

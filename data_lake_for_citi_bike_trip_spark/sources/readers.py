@@ -78,56 +78,6 @@ def read_staging_json(
     return reader.json(path)
 
 
-def parse_stringified_list(col):
-    """Recover a real ArrayType from the reference's stringified Python
-    list ("['KEY', 'CREDITCARD']" — produced by pandas round-tripping GBFS
-    JSON through CSV, SURVEY.md §1.3). Single->double quote rewrite then
-    from_json; malformed input yields NULL rather than an error."""
-    from pyspark.sql import functions as F
-
-    return F.from_json(F.regexp_replace(col, "'", '"'), "array<string>")
-
-
-def read_lake(spark: SparkSession, path: str, *, merge_schema: bool = False) -> DataFrame:
-    """Read a (possibly partitioned) parquet lake table.
-
-    ``merge_schema=True`` unions footers across files so partitions written
-    by newer pipeline versions with added columns read cleanly (older rows
-    get NULLs). Off by default: schema merging reads every footer — at
-    100 TB turn it on only for tables known to evolve, or keep an explicit
-    contract schema instead.
-    """
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", True)
-    return reader.parquet(path)
-
-
-def read_json_permissive(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> DataFrame:
-    """JSON scan that quarantines malformed records instead of failing the
-    job (PERMISSIVE + _corrupt_record): the ingest-side DQ pattern — count
-    and divert bad rows, never lose the batch.
-
-    Caveat (enforced by Spark): a query whose referenced columns reduce to
-    ONLY ``_corrupt_record`` raises QUERY_ONLY_CORRUPT_RECORD_COLUMN —
-    ``.cache()`` the parsed frame before filtering/counting on it.
-    """
-    # Build a COPY — StructType.add mutates in place, which would
-    # permanently append _corrupt_record to a shared module-level schema
-    # (and duplicate it on the next call).
-    full = T.StructType(
-        list(schema.fields) + [T.StructField("_corrupt_record", T.StringType())]
-    )
-    return (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-    )
-
-
 def read_fixed_width(
     spark: SparkSession,
     path: str,

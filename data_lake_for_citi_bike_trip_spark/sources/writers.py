@@ -20,8 +20,6 @@ def write_table(
     *,
     partition_by: list[str] | None = None,
     mode: str = "overwrite",
-    compression: str | None = None,
-    max_records_per_file: int | None = None,
 ) -> None:
     """Write parquet with the engine's layout rules.
 
@@ -32,16 +30,10 @@ def write_table(
         incremental load (requires
         spark.sql.sources.partitionOverwriteMode=dynamic, set by session).
 
-    File hygiene at scale: ``compression`` (zstd beats snappy ~30% on
-    text-heavy tables at similar CPU) and ``max_records_per_file`` (bound
-    file sizes so downstream scans split evenly; pair with AQE coalescing
-    so partitions don't fragment into many small files).
+    Codec and file sizes are the session's defaults (snappy parquet; AQE
+    coalescing keeps partitions from fragmenting into many small files).
     """
     writer = df.write.format("parquet")
-    if compression:
-        writer = writer.option("compression", compression)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     if mode == "overwrite_partitions":
@@ -50,38 +42,3 @@ def write_table(
         writer = writer.mode(mode)
     writer.save(path)
 
-
-def table_bytes(spark, path: str) -> int:
-    """Total on-disk bytes of a parquet table (driver-side FS metadata
-    only — works for any Hadoop-compatible store, no data read)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(conf)
-    summary = fs.getContentSummary(hpath)
-    return int(summary.getLength())
-
-
-def compact_table(
-    spark,
-    src_path: str,
-    dest_path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Small-file compaction: rewrite a parquet table into ~target-sized
-    files. Returns the output file count.
-
-    The maintenance half of the file-hygiene story: streaming /
-    incremental loads fragment partitions into many small files, and scan
-    cost at 100 TB is dominated by per-file open overhead once files drop
-    well below the HDFS/S3 sweet spot. ``coalesce`` (not repartition)
-    merges input splits WITHOUT a shuffle. Writes to a NEW path — the
-    atomic swap belongs to a transactional table format or orchestrator,
-    not a blind in-place overwrite of a table readers may be scanning.
-    """
-    import math
-
-    df = spark.read.parquet(src_path)
-    n_out = max(1, math.ceil(table_bytes(spark, src_path) / target_file_bytes))
-    df.coalesce(n_out).write.mode("overwrite").parquet(dest_path)
-    return n_out

@@ -9,6 +9,10 @@ a streaming groupBy, so it scales the same way.
 ``user_running_totals`` is deliberately simple (a per-user counter) so the
 cross-batch state behavior is observable and oracle-checkable: the final
 update per user must equal the batch count.
+
+Every operator here uses applyInPandasWithState. Spark 4's
+transformWithStateInPandas is not used: its Python state server speaks
+protobuf, which the engine does not depend on.
 """
 
 from __future__ import annotations
@@ -41,82 +45,6 @@ def user_running_totals(events: DataFrame) -> DataFrame:
         stateStructType=STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4's arbitrary-state API): typed state
-# variables on a StatefulProcessorHandle instead of a single state tuple,
-# per-key timers available, RocksDB-backed. The successor to
-# applyInPandasWithState above — both kept so either surface is covered.
-# ---------------------------------------------------------------------------
-
-TWS_OUTPUT_SCHEMA = "user_id bigint, n_events bigint, max_event_id bigint"
-
-
-class _UserTotalsProcessor:
-    """Per-user running (count, max event_id) with a ValueState."""
-
-    def init(self, handle) -> None:
-        self._totals = handle.getValueState(
-            "totals", "cnt bigint, max_eid bigint"
-        )
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        if self._totals.exists():
-            cnt, max_eid = self._totals.get()
-        else:
-            cnt, max_eid = 0, -1
-        for pdf in rows:
-            cnt += len(pdf)
-            if len(pdf):
-                max_eid = max(max_eid, int(pdf["event_id"].max()))
-        self._totals.update((cnt, max_eid))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [cnt], "max_event_id": [max_eid]}
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def tws_available() -> bool:
-    """transformWithStateInPandas talks to a Python state server over
-    protobuf; without the protobuf package the streaming runner crashes
-    at init. Gate, don't crash (this container ships no protobuf)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def user_totals_tws(events: DataFrame) -> DataFrame:
-    """transformWithStateInPandas form of the running per-user totals.
-    Requires the RocksDB state store provider (set by the caller's
-    session) AND the protobuf package (see tws_available). One update
-    row per (user, batch); counts/maxes are monotone so the final state
-    is the per-key max of the updates."""
-    if not tws_available():
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the protobuf package for its "
-            "state-server protocol; not installed in this environment. "
-            "user_running_totals (applyInPandasWithState) provides the same "
-            "semantics on the stable API."
-        )
-    from pyspark.sql.streaming import StatefulProcessor
-
-    # subclass dynamically so module import works even on a Spark
-    # without the API (the operator itself then raises cleanly)
-    proc_cls = type(
-        "UserTotalsProcessor", (StatefulProcessor,), dict(_UserTotalsProcessor.__dict__)
-    )
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=proc_cls(),
-        outputStructType=TWS_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )
 
 

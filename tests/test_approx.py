@@ -217,7 +217,7 @@ def test_chisq_uniform_table_has_zero_statistic(spark):
 
 
 def test_rank_sum_exact_u_and_ties(spark):
-    """click values {1,2,3}, purchase {2,3,4} (cents 100..400):
+    r"""click values {1,2,3}, purchase {2,3,4} (cents 100..400):
     pairwise wins for click: beats none of purchase except ties —
     U_a = #\{(a,b): a>b\} + ties/2 = (2>?)... computed by hand below."""
     from data_lake_for_citi_bike_trip_spark.operators import profile

@@ -76,24 +76,6 @@ def test_observed_metrics_single_pass(spark, sf_dir):
     assert got["max_key"] == expect.mk
 
 
-def test_assert_observed_raises_on_failure(spark, sf_dir):
-    import pytest
-
-    from data_lake_for_citi_bike_trip_spark.plans import checks as C
-    from data_lake_for_citi_bike_trip_spark.sources.registry import load_table
-
-    orders = load_table(spark, sf_dir, "orders")
-    ok = [
-        C.not_empty("rows", orders),
-        C.no_nulls("keys", orders, "o_orderkey"),
-    ]
-    results = C.assert_observed(orders, ok)
-    assert all(passed for _, _, passed in results)
-    bad = [C.Check("impossible", orders, F.count(F.lit(1)), -1, __import__("operator").lt)]
-    with pytest.raises(ValueError, match="impossible"):
-        C.assert_observed(orders, bad)
-
-
 def test_replica_diff_flags_exactly_planted_buckets(spark, sf_dir):
     import pyspark.sql.functions as F
 

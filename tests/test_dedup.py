@@ -181,17 +181,6 @@ def test_ngram_hot_shingle_cap_is_default_on(spark):
     assert capped.count() == 0
 
 
-def test_pandas_udf_cosine_matches_expression_path(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5)
-    expr_out = {(r.q_id, r.vec_id): r.cos_sim for r in similarity.cosine_topk(emb, queries, k=10).collect()}
-    udf_out = {(r.q_id, r.vec_id): r.cos_sim for r in similarity.cosine_topk_pandas(emb, queries, k=10).collect()}
-    # identical neighbor sets; scores equal within BLAS-order tolerance
-    assert set(expr_out) == set(udf_out)
-    for key in expr_out:
-        assert abs(expr_out[key] - udf_out[key]) < 1e-5, key
-
-
 def test_connected_components_chain_and_singletons(spark):
     """A 4-node chain (1-2, 2-3, 3-4) must collapse to one cluster even
     though 1 and 4 share no edge (transitivity needs >1 propagation

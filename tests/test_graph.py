@@ -22,9 +22,9 @@ def _mirror(edges: list[tuple[int, int]], iters: int = 3) -> dict[int, int]:
     return r
 
 
-def _run(spark, edges, **kw):
+def _run(spark, edges):
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    return {r.id: r.rank_e6 for r in graph.pagerank(df, **kw).collect()}
+    return {r.id: r.rank_e6 for r in graph.pagerank(df).collect()}
 
 
 def test_cycle_is_stationary(spark):
@@ -41,15 +41,12 @@ def test_star_matches_integer_mirror(spark):
     assert got[0] > got[2]
 
 
-def test_broadcast_and_copartitioned_paths_agree(spark):
+def test_multi_cycle_graph_matches_integer_mirror(spark):
     edges = [(i, (i * 3 + 1) % 7) for i in range(7) for _ in range(1)] + [
         (0, 5),
         (5, 0),
         (2, 6),
     ]
-    assert _run(spark, edges, broadcast_ranks=True) == _run(
-        spark, edges, broadcast_ranks=False
-    )
     assert _run(spark, edges) == _mirror(edges)
 
 

@@ -1,11 +1,7 @@
-"""Lake layout behavior: partition pruning, codecs, file sizing."""
+"""Lake layout behavior: partition pruning, Z-ordered file skipping."""
 
 from __future__ import annotations
 
-import glob
-import os
-
-import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from data_lake_for_citi_bike_trip_spark.operators import staging, star
@@ -14,12 +10,12 @@ from data_lake_for_citi_bike_trip_spark.sources.registry import load_table
 from data_lake_for_citi_bike_trip_spark.sources.writers import write_table
 
 
-def _write_fact(spark, sf_dir, path, **kw):
+def _write_fact(spark, sf_dir, path):
     events = load_table(spark, sf_dir, "events")
     fact = star.fact_trips(
         staging.trips(events), staging.covid(events), staging.weather(events)
     )
-    write_table(fact, path, partition_by=["year", "month"], **kw)
+    write_table(fact, path, partition_by=["year", "month"])
     return fact
 
 
@@ -33,78 +29,6 @@ def test_partition_pruning_on_written_lake(spark, sf_dir, tmp_path):
     assert "PartitionFilters" in plan
     assert "year#" in plan.split("PartitionFilters")[1][:200]
     assert one_month.count() == lake.count()  # testdata is all 2024-01
-
-
-def test_writer_codec_and_file_sizing(spark, sf_dir, tmp_path):
-    path = str(tmp_path / "fact_zstd")
-    _write_fact(spark, sf_dir, path, compression="zstd", max_records_per_file=200)
-    files = glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    assert files
-    meta = pq.ParquetFile(files[0]).metadata
-    assert meta.row_group(0).column(0).compression.lower() == "zstd"
-    assert all(pq.ParquetFile(f).metadata.num_rows <= 200 for f in files)
-
-
-def test_schema_evolution_merge(spark, sf_dir, tmp_path):
-    from data_lake_for_citi_bike_trip_spark.sources.readers import read_lake
-
-    path = str(tmp_path / "evolving")
-    events = load_table(spark, sf_dir, "events").limit(100)
-    v1 = events.select("event_id", "user_id")
-    v1.write.parquet(path + "/month=1")
-    v2 = events.select("event_id", "user_id", F.col("value").alias("score"))
-    v2.write.parquet(path + "/month=2")
-
-    merged = read_lake(spark, path, merge_schema=True)
-    assert set(merged.columns) == {"event_id", "user_id", "score", "month"}
-    # old partition reads with NULL for the added column
-    assert merged.where((F.col("month") == 1) & F.col("score").isNotNull()).count() == 0
-    assert merged.where((F.col("month") == 2) & F.col("score").isNull()).count() == 0
-
-
-def test_permissive_json_quarantines_corrupt_rows(spark, tmp_path):
-    from pyspark.sql import types as T
-    from data_lake_for_citi_bike_trip_spark.sources.readers import read_json_permissive
-
-    p = tmp_path / "feed.json"
-    p.write_text(
-        '{"valid_time_gmt": 100, "temp": 5}\n'
-        "{this is not json}\n"
-        '{"valid_time_gmt": 200, "temp": 6}\n'
-        '{"valid_time_gmt": "not-a-number", "temp": 7}\n'
-    )
-    schema = T.StructType(
-        [T.StructField("valid_time_gmt", T.LongType()), T.StructField("temp", T.LongType())]
-    )
-    df = read_json_permissive(spark, str(p), schema).cache()
-    good = df.where(F.col("_corrupt_record").isNull())
-    bad = df.where(F.col("_corrupt_record").isNotNull())
-    assert good.count() == 2 and bad.count() == 2  # batch survives, bad rows divert
-    assert {r.valid_time_gmt for r in good.collect()} == {100, 200}
-    df.unpersist()
-
-
-def test_compact_table_reduces_file_count(spark, sf_dir, tmp_path):
-    from data_lake_for_citi_bike_trip_spark.sources.writers import (
-        compact_table,
-        table_bytes,
-    )
-
-    frag = str(tmp_path / "fragmented")
-    _write_fact(spark, sf_dir, frag, max_records_per_file=100)
-    n_before = len(glob.glob(os.path.join(frag, "**", "*.parquet"), recursive=True))
-    assert n_before > 10  # genuinely fragmented
-
-    compacted = str(tmp_path / "compacted")
-    n_out = compact_table(spark, frag, compacted, target_file_bytes=64 * 1024 * 1024)
-    files_after = glob.glob(os.path.join(compacted, "*.parquet"))
-    assert len(files_after) == n_out < n_before
-    # data survives byte-identically (order-insensitive)
-    a = spark.read.parquet(frag)
-    b = spark.read.parquet(compacted)
-    assert a.count() == b.count()
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    assert table_bytes(spark, compacted) > 0
 
 
 def test_zorder_write_enables_file_skipping(spark, sf_dir, tmp_path):

@@ -176,20 +176,6 @@ def test_elt_null_propagating_user_key(spark, staging_paths, tmp_path):
     assert nulls.where(F.col("user_agg_id").isNotNull()).count() == 0
 
 
-def test_rental_methods_list_recovery(spark):
-    from data_lake_for_citi_bike_trip_spark.sources.readers import parse_stringified_list
-
-    df = spark.createDataFrame(
-        [("['KEY', 'CREDITCARD']",), ("[]",), ("not a list",), (None,)],
-        "rental_methods string",
-    )
-    out = df.select(parse_stringified_list(F.col("rental_methods")).alias("arr")).collect()
-    assert out[0].arr == ["KEY", "CREDITCARD"]
-    assert out[1].arr == []
-    assert out[2].arr is None  # malformed -> NULL, not an exception
-    assert out[3].arr is None
-
-
 def test_elt_incremental_monthly_load(spark, staging_paths, tmp_path_factory):
     """The production cadence: each month's run writes only that month's
     partitions (dynamic overwrite); earlier months survive untouched."""
@@ -247,23 +233,6 @@ def test_read_staging_csv_missing_schema_field_is_typed_null(spark, tmp_path):
     assert dict(out.dtypes)["missing_col"] == "double"
     rows = out.collect()
     assert len(rows) == 2 and all(r.missing_col is None for r in rows)
-
-
-def test_read_json_permissive_does_not_mutate_caller_schema(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from data_lake_for_citi_bike_trip_spark.sources import readers
-
-    p = tmp_path / "recs.json"
-    p.write_text('{"a": 1}\n{"a": bad}\n')
-    shared = T.StructType([T.StructField("a", T.LongType())])
-    out1 = readers.read_json_permissive(spark, str(p), shared).cache()
-    out2 = readers.read_json_permissive(spark, str(p), shared).cache()
-    # the shared schema object must be untouched (StructType.add mutates)
-    assert [f.name for f in shared.fields] == ["a"]
-    for out in (out1, out2):
-        assert out.columns == ["a", "_corrupt_record"]
-        assert out.where(F.col("_corrupt_record").isNotNull()).count() == 1
 
 
 def test_elt_observed_metrics_match_written_counts(spark, staging_paths, tmp_path):

@@ -143,33 +143,3 @@ def test_minhash_band_join_planted_skew_gets_aqe_split(session_clone):
     # the identical-document block reach the band join would show up
     # here as skew=true or as a single fat partition)
     assert "skew=true" not in final_plan, final_plan[:4000]
-
-
-def test_salted_candidates_lazy_gate_no_jobs_and_identical(spark):
-    """ADVICE r11: ``eager_gate=False`` must build the plan WITHOUT
-    submitting any Spark job at construction (explain-only / plan-dump
-    callers), and the resulting join must emit exactly the plain
-    equi-join's pairs — whale key included."""
-    sc = spark.sparkContext
-    probe = spark.range(3000).selectExpr(
-        "id AS pid", "CASE WHEN id % 10 < 7 THEN 0 ELSE id % 13 END AS bkt"
-    )
-    build = spark.range(900).selectExpr(
-        "id AS bid", "CASE WHEN id % 10 < 7 THEN 0 ELSE id % 13 END AS bkt"
-    )
-    sc.setJobGroup("lazy_gate_construction", "plan construction only")
-    try:
-        lazy = skew.salted_candidates(
-            probe, build, "bkt", "pid", eager_gate=False
-        )
-        lazy.explain()  # planning must also stay job-free
-    finally:
-        sc.setJobGroup("lazy_gate_after", "done")
-    jobs = sc.statusTracker().getJobIdsForGroup("lazy_gate_construction")
-    assert list(jobs) == [], (
-        f"lazy gate submitted jobs at construction: {list(jobs)}"
-    )
-    plain = probe.join(build, "bkt")
-    assert sorted(lazy.columns) == sorted(plain.columns)
-    diff = lazy.exceptAll(plain).count() + plain.exceptAll(lazy).count()
-    assert diff == 0, f"{diff} mismatched candidate pairs"

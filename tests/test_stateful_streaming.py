@@ -36,43 +36,6 @@ def test_running_totals_accumulate_across_batches(spark, sf_dir, tmp_path):
     joined.unpersist()
 
 
-def test_tws_totals_or_clean_gate(spark, sf_dir, tmp_path):
-    """transformWithStateInPandas (Spark 4 arbitrary-state API): when the
-    protobuf dependency is present the results must match the
-    applyInPandasWithState op and the batch aggregate; when absent the
-    operator must refuse with a clear NotImplementedError (never a
-    worker crash mid-query)."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from data_lake_for_citi_bike_trip_spark.sources.registry import load_table
-    from data_lake_for_citi_bike_trip_spark.streaming import pipeline, stateful
-
-    sess = pipeline.scoped_session(spark, 4)
-    sess.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    stream = pipeline.stream_events(sess, sf_dir)
-    if not stateful.tws_available():
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            stateful.user_totals_tws(stream)
-        return
-    updates = stateful.user_totals_tws(stream)
-    out = pipeline.run_available_now(updates, "tws_test", "update")
-    final = out.groupBy("user_id").agg(
-        F.max("n_events").alias("n"), F.max("max_event_id").alias("m")
-    )
-    events = load_table(spark, sf_dir, "events")
-    expect = events.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n"), F.max("event_id").alias("m")
-    )
-    assert sorted(map(tuple, final.collect())) == sorted(
-        map(tuple, expect.collect())
-    )
-
-
 def test_advance_sessions_core_crosses_batches():
     """The pure session-walk core must CONTINUE the open session across
     a batch boundary (same id, merged extent) and must match a

@@ -97,41 +97,6 @@ def test_decode_ppm_header():
         multimodal.decode_ppm(b"P3\n1 1\n255\n0 0 0")
 
 
-def test_real_bmp_resize_preserves_pixels(spark, sf_dir):
-    """Real nearest-neighbor resample: resized output is a valid BMP of
-    the target dims and a solid-color image stays that color."""
-    import struct
-
-    # 6x4 solid-red 24-bit BMP built in python (BGR rows, 4-byte padded)
-    w, h = 6, 4
-    row = (b"\x00\x00\xff" * w).ljust(((w * 3 + 3) // 4) * 4, b"\x00")
-    data = row * h
-    header = bytearray(54)
-    header[:2] = b"BM"
-    struct.pack_into("<I", header, 2, 54 + len(data))
-    struct.pack_into("<I", header, 10, 54)
-    struct.pack_into("<I", header, 14, 40)
-    struct.pack_into("<i", header, 18, w)
-    struct.pack_into("<i", header, 22, h)
-    struct.pack_into("<H", header, 26, 1)
-    struct.pack_into("<H", header, 28, 24)
-    struct.pack_into("<I", header, 34, len(data))
-    raw = bytes(header) + data
-
-    out = multimodal.resize_bmp(raw, 3, 2)
-    assert multimodal.decode_bmp(out) == (3, 2, 3)
-    pix_row = ((3 * 3 + 3) // 4) * 4
-    body = out[54:]
-    assert len(body) == pix_row * 2
-    for y in range(2):
-        assert body[y * pix_row : y * pix_row + 9] == b"\x00\x00\xff" * 3
-
-    # and through the Arrow-batched Spark path with the DEFAULT resizer
-    media = spark.createDataFrame([(1, bytearray(raw))], "media_id long, payload binary")
-    rows = multimodal.resize_images(media, 3, 2).collect()
-    assert len(rows) == 1 and bytes(rows[0].resized) == out
-
-
 def test_chunk_documents_overlap_and_coverage(spark):
     from data_lake_for_citi_bike_trip_spark.operators import corpus
 
@@ -157,37 +122,6 @@ def test_chunk_documents_overlap_and_coverage(spark):
     )
     out = corpus.chunk_documents(tiny).collect()
     assert len(out) == 1 and out[0].chunk_tokens == 3
-
-
-def test_resize_and_frame_sample_plumbing(spark, sf_dir):
-    from data_lake_for_citi_bike_trip_spark.operators import multimodal
-
-    docs = load_table(spark, sf_dir, "documents").limit(10)
-    media = multimodal.media_table(docs)
-
-    multimodal.register_resizer("fake", lambda b, w, h: b[: w * h % 64 + 1])
-    resized = multimodal.resize_images(media, 32, 32, resizer="fake").collect()
-    assert len(resized) == 10
-    assert all(r.width == 32 and r.height == 32 and len(r.resized) >= 1 for r in resized)
-
-    # framer: deterministic fake "video" — one frame per 50-byte stripe
-    multimodal.register_framer(
-        "fake", lambda b, n: [b[i : i + 50] for i in range(0, len(b), 50 * n)]
-    )
-    frames = multimodal.sample_frames(media, every_nth=4, framer="fake")
-    per_media = {r.media_id: r.cnt for r in frames.groupBy("media_id").agg(F.count("*").alias("cnt")).collect()}
-    src_len = {r.doc_id: len(r.text.encode()) for r in docs.collect()}
-    for mid, cnt in per_media.items():
-        expected = len(range(0, src_len[mid], 200))
-        assert cnt == expected, (mid, cnt, expected)
-
-    import pytest as _pytest
-    with _pytest.raises(Exception, match="not registered"):
-        multimodal.resize_images(media, 8, 8, resizer="nope")
-    # 'real' resizer IS registered (BMP nearest-neighbor), but text
-    # payloads are not BMPs — the failure surfaces at execution
-    with _pytest.raises(Exception, match="not a BMP"):
-        multimodal.resize_images(media, 8, 8, resizer="real").collect()
 
 
 def test_png_codec_roundtrip_and_failure_modes():
