@@ -79,7 +79,7 @@ def main() -> None:
     # "queries" min keeps its old job (intrinsic per-query cost with box
     # noise pinned; iterations after the first still reuse the query's
     # OWN caches, as a repeated production query would). Plan-handle /
-    # metadata memos (load_table handles, ts-sniff, gate scalars) are
+    # metadata memos (load_table handles, ts-sniff, drain sessions) are
     # kept: they hold no materialized data.
     from data_lake_for_citi_bike_trip_spark import caching
 

@@ -32,8 +32,8 @@ _RELEASE_CALLBACKS: list = []
 
 def on_release(cb) -> None:
     """Register a zero-arg callback run by :func:`release_caches` —
-    for operator-level memos whose lifetime must match the cache
-    registry's (e.g. the salted-join gate memo in operators.skew)."""
+    for session memos whose lifetime must match the cache registry's
+    (e.g. the ``load_table`` plan-handle memo in sources.registry)."""
     _RELEASE_CALLBACKS.append(cb)
 
 
@@ -58,7 +58,7 @@ def release_data_caches() -> int:
     """Unpersist every registered DataFrame; returns how many.
 
     Keeps the :func:`on_release` memos (load_table handles, ts-sniff
-    flags, gate scalars), which hold no materialized data — what a
+    flags, drain sessions), which hold no materialized data — what a
     cold-cost benchmark wants between queries. Re-execution after
     release is still CORRECT (Spark recomputes from source), just cold."""
     n = 0

@@ -39,48 +39,41 @@ from .asof import join_carry_null_safe
 USER_WINDOW_HOT_MIN_ROWS = 4_000_000
 
 
-def _hot_user_width_us(
-    events: DataFrame, hot_min_rows: int | None = None
-) -> float | None:
+def _hot_user_width_us(events: DataFrame) -> float | None:
     """The sessionize auto-chooser gate for any raw-event user-keyed
-    window in this module: one memoized metadata-scale counting pass
+    window in this module: one metadata-scale counting pass
     (``skew.hot_window_gate``) over (user_id, ts); returns the derived
-    bucket width in MICROS when some user owns >= ``hot_min_rows``
-    events (None otherwise, or when the time span is degenerate)."""
+    bucket width in MICROS when some user owns >=
+    ``USER_WINDOW_HOT_MIN_ROWS`` events (None otherwise, or when the
+    time span is degenerate). The threshold is read at CALL time so the
+    module global stays the single tunable (and tests can lower it)."""
     from .skew import auto_bucket_width, hot_window_gate
 
-    if hot_min_rows is None:
-        # resolved at CALL time so the module global stays the single
-        # tunable (and tests can lower it)
-        hot_min_rows = USER_WINDOW_HOT_MIN_ROWS
     stats = events.select(
         F.col("user_id").alias("__k"),
         F.unix_micros("ts").cast("double").alias("__t"),
     )
-    max_rows, span_us = hot_window_gate(stats, hot_min_rows)
-    if max_rows >= hot_min_rows:
+    max_rows, span_us = hot_window_gate(stats)
+    if max_rows >= USER_WINDOW_HOT_MIN_ROWS:
         return auto_bucket_width(events.sparkSession, span_us)
     return None
 
 
-def _has_hot_user(events: DataFrame, hot_min_rows: int | None = None) -> bool:
+def _has_hot_user(events: DataFrame) -> bool:
     """Row-count-only form of the gate for plans that do not bucket by
     time (ADVICE r12: ``user_paths`` salts by event_id hash, so a whale
     whose events share ONE timestamp — degenerate span, width None —
-    must still escape the single-task collect_list). Same memoized
-    ``hot_window_gate`` counting pass as ``_hot_user_width_us``: the
-    stats frame is byte-identical, so when both run in one session the
-    second is a memo hit, not a second job."""
+    must still escape the single-task collect_list). Same
+    ``hot_window_gate`` counting pass as ``_hot_user_width_us``; each
+    call runs its own job."""
     from .skew import hot_window_gate
 
-    if hot_min_rows is None:
-        hot_min_rows = USER_WINDOW_HOT_MIN_ROWS
     stats = events.select(
         F.col("user_id").alias("__k"),
         F.unix_micros("ts").cast("double").alias("__t"),
     )
-    max_rows, _ = hot_window_gate(stats, hot_min_rows)
-    return max_rows >= hot_min_rows
+    max_rows, _ = hot_window_gate(stats)
+    return max_rows >= USER_WINDOW_HOT_MIN_ROWS
 
 
 def cohort_retention(events: DataFrame) -> DataFrame:

@@ -142,7 +142,7 @@ def interval_union_length(
     rows — but wall-time A/Bs at toy scale say nothing about the 100x
     failure mode, which is ONE task sorting a whale's whole history.
     So the gate fires on estimated whale-partition bytes from the same
-    memoized counting pass (max per-user rows x ``_INTERVAL_ROW_BYTES``)
+    counting pass (max per-user rows x ``_INTERVAL_ROW_BYTES``)
     crossing ``INTERVAL_UNION_HOT_BYTES`` (1 GiB): below it the
     measured-faster plain plan always wins (16M-hot whale = 4.8M rows
     ~ 0.43 GiB at the task-metrics-calibrated 96 B/row, measured
@@ -168,13 +168,8 @@ def interval_union_length(
             F.col("user_id").alias("__k"),
             F.unix_micros("ts").cast("double").alias("__t"),
         )
-        # hot_min_rows participates only in the memo key; derive it
-        # from the byte bound so the memo stays bound-consistent
-        bound = INTERVAL_UNION_HOT_BYTES
-        max_rows, span = hot_window_gate(
-            stats, max(bound // _INTERVAL_ROW_BYTES, 1)
-        )
-        if max_rows * _INTERVAL_ROW_BYTES > bound:
+        max_rows, span = hot_window_gate(stats)
+        if max_rows * _INTERVAL_ROW_BYTES > INTERVAL_UNION_HOT_BYTES:
             w_f = auto_bucket_width(events.sparkSession, span)
             if w_f is not None:
                 width_us = max(int(w_f), 1)

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..caching import cached, on_release
+from ..caching import cached
 from ..functions import vectors as V
 from ..session import spread
 from .skew import salted_candidates
@@ -44,13 +44,6 @@ def _prepared(embeddings: DataFrame) -> DataFrame:
     )
 
 
-#: memo for auto_bucket_bits — same immutable-inputs contract as
-#: skew._GATE_MEMO (semanticHash fingerprints the PLAN; testdata is
-#: immutable for the session); cleared by caching.release_caches.
-_BITS_MEMO: dict = {}
-on_release(_BITS_MEMO.clear)
-
-
 def auto_bucket_bits(embeddings: DataFrame) -> int:
     """Corpus-size-derived sign-LSH width:
     ``bits = clamp(ceil(log2(n)) - 3, 4, 24)``.
@@ -65,41 +58,13 @@ def auto_bucket_bits(embeddings: DataFrame) -> int:
     tiny corpora); cap 24 bounds the bucket string within dims (64 in
     the testdata) and multiprobe's (1 + bits)× probe fan-out.
 
-    The count is one column-pruned scan, memoized per (session, plan)
-    like skew.salted_candidates' stats gate. The DuckDB oracle derives
-    the SAME width with ``CEIL(LOG2(COUNT(*)))`` over the same input, so
-    the adaptive behavior itself is oracle-checked.
+    The count is one column-pruned scan per call, so the width follows
+    the data as it is now. The DuckDB oracle derives the SAME width with
+    ``CEIL(LOG2(COUNT(*)))`` over the same input, so the adaptive
+    behavior itself is oracle-checked.
     """
-    # Key hardening (ADVICE r14): id() can be recycled after a session
-    # is garbage-collected, and the 32-bit semanticHash can collide in
-    # a long session — either would silently return a WRONG width,
-    # which changes operator output, not just speed. The memo therefore
-    # stores the session object and the plan's schema string in the
-    # VALUE and verifies both on hit: the session by identity (a strong
-    # ref also pins the id for the entry's lifetime) and the schema as
-    # a cheap collision fence for the hash. Cleared by release_caches.
-    key = None
-    try:
-        session = embeddings.sparkSession
-        schema_str = embeddings.schema.simpleString()
-        key = (
-            id(session),
-            embeddings._jdf.queryExecution().analyzed().semanticHash(),
-        )
-        hit = _BITS_MEMO.get(key)
-        if (
-            hit is not None
-            and hit[0] is session
-            and hit[1] == schema_str
-        ):
-            return hit[2]
-    except Exception:
-        key = None
     n = embeddings.count()
-    bits = max(4, min(24, (max(n, 2) - 1).bit_length() - 3))
-    if key is not None:
-        _BITS_MEMO[key] = (session, schema_str, bits)
-    return bits
+    return max(4, min(24, (max(n, 2) - 1).bit_length() - 3))
 
 
 def cosine_topk(
@@ -178,51 +143,14 @@ def _assign(corpus: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-def auto_ivf_nlist(embeddings: DataFrame) -> int:
-    """Corpus-size-derived centroid count: ``clamp(round(sqrt(n)), 8, 4096)``.
-
-    IVF cost balance: training + assignment is O(n · nlist · iters) and
-    per-query probe cost is O(nlist + nprobe · n / nlist) — nlist ≈
-    sqrt(n) makes both probe terms O(sqrt(n)) (the standard IVF sizing;
-    FAISS guidance is sqrt(n)..16·sqrt(n), and we take the low end
-    because each Lloyd iteration here is a full Spark job over the
-    corpus, so training cost scales directly with nlist). The cap keeps
-    the centroid table broadcastable (4096 × 64 doubles ≈ 2 MB); above
-    it, grow nprobe instead of nlist. Count memoized per (session,
-    plan) exactly as auto_bucket_bits.
-    """
-    import math
-
-    key = None
-    try:
-        key = (
-            "ivf",
-            id(embeddings.sparkSession),
-            embeddings._jdf.queryExecution().analyzed().semanticHash(),
-        )
-        if key in _BITS_MEMO:
-            return _BITS_MEMO[key]
-    except Exception:
-        pass
-    n = embeddings.count()
-    nlist = max(8, min(4096, round(math.sqrt(max(n, 1)))))
-    if key is not None:
-        _BITS_MEMO[key] = nlist
-    return nlist
-
-
 def train_ivf_centroids(
-    embeddings: DataFrame, k: int | None = None, iters: int = 3
+    embeddings: DataFrame, k: int, iters: int = 3
 ) -> DataFrame:
     """Lloyd's k-means with deterministic init (the k lowest vec_ids).
 
     Each iteration: assign (map-side, centroids broadcast) then
     recompute per-dimension means via posexplode -> two-level aggregate.
-    k*dim floats per iteration cross the driver — nothing else does.
-    ``k=None`` derives the centroid count from the corpus size
-    (``auto_ivf_nlist``)."""
-    if k is None:
-        k = auto_ivf_nlist(embeddings)
+    k*dim floats per iteration cross the driver — nothing else does."""
     corpus = _prepared(embeddings)
     centroids = (
         corpus.orderBy("vec_id")
@@ -260,11 +188,8 @@ class IVFIndex:
         self.index = index
 
 
-def build_ivf_index(
-    embeddings: DataFrame, k: int | None = None, iters: int = 3
-) -> IVFIndex:
-    """Train centroids and materialize the inverted-list assignment.
-    ``k=None`` derives the centroid count from the corpus size."""
+def build_ivf_index(embeddings: DataFrame, k: int, iters: int = 3) -> IVFIndex:
+    """Train centroids and materialize the inverted-list assignment."""
     centroids = cached(train_ivf_centroids(embeddings, k=k, iters=iters))
     index = cached(_assign(_prepared(embeddings), centroids))
     return IVFIndex(centroids, index)
@@ -302,20 +227,6 @@ def ivf_search(
     )
 
 
-def ivf_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    centroids: DataFrame,
-    k: int = 10,
-    nprobe: int = 4,
-) -> DataFrame:
-    """One-shot convenience: assign + search without caching (kept for
-    callers that only search once; repeated searches should
-    ``build_ivf_index`` once and ``ivf_search`` many times)."""
-    index = _assign(_prepared(embeddings), centroids)
-    return ivf_search(IVFIndex(centroids, index), queries, k=k, nprobe=nprobe)
-
-
 def knn_graph(embeddings: DataFrame, k: int = 5) -> DataFrame:
     """Exact k-nearest-neighbor GRAPH: for every vector, its top-k
     neighbors by cosine — the all-sources generalization of
@@ -324,7 +235,7 @@ def knn_graph(embeddings: DataFrame, k: int = 5) -> DataFrame:
     Exact kNN over n vectors is inherently O(n²) comparisons; this is
     the small-corpus / per-block building block. At 100 TB scale the
     same shape runs INSIDE candidate blocks from the LSH
-    (``lsh_bucket_topk``) or IVF (``ivf_topk``) partitioners — block
+    (``lsh_bucket_topk``) or IVF (``ivf_search``) partitioners — block
     sizes are bounded, so each block's local graph is cheap and
     embarrassingly parallel. The window top-k keeps only k rows per
     source past the shuffle (rank pushes partial TopK into the sort).
@@ -1198,6 +1109,9 @@ def blocked_knn_multiprobe_recall(
     # joins); persist so the quadratic baseline pipeline runs ONCE.
     # Sample-scale pair list — bounded memory (see blocked_knn_recall).
     exact = mutual_knn_pairs(embeddings, k=k).select("v1", "v2").persist()
+    # One width for both blocked graphs, measured once (one count job).
+    if bucket_bits is None:
+        bucket_bits = auto_bucket_bits(embeddings)
     single = blocked_mutual_knn(embeddings, k=k, bucket_bits=bucket_bits).select(
         "v1", "v2"
     )

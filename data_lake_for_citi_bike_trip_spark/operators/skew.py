@@ -24,39 +24,10 @@ from typing import Sequence, Union
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import on_release, register
-
-#: session-scoped memo of salted_candidates gate verdicts, keyed by the
-#: (session, probe/build plan semantics, params) tuple. Plan
-#: CONSTRUCTION triggers the eager stats job; bench repeats, plan
-#: dumps, and test sweeps rebuild semantically identical plans many
-#: times per session, and without the memo each rebuild re-submits the
-#: gate job (the cached kstats DATA is reused, but the job round-trip
-#: and scans are not free). Cleared with release_caches — the memo's
-#: kstats references die with the cache registry.
-#: CONTRACT (ADVICE r11): the memo assumes the probe/build SOURCES are
-#: immutable for the session — semanticHash fingerprints the PLAN, not
-#: the data, so underlying files changing between calls (or a 32-bit
-#: hash collision) would replay a stale verdict, and in the whale path
-#: the cached kstats inner-join would silently drop keys that newly
-#: appeared. Sessions that mutate inputs mid-stream must call
-#: ``caching.release_caches()`` after the mutation — it clears this
-#: memo along with the kstats caches the verdicts point at.
-_GATE_MEMO: dict = {}
-on_release(_GATE_MEMO.clear)
-
-#: session-scoped memo of hot_window_gate verdicts (same design and
-#: same immutable-inputs contract as _GATE_MEMO above; cleared by
-#: release_caches). Keyed (session id, stats-frame semanticHash,
-#: hot_min_rows) -> (max key rows, non-null time span) — metadata-scale
-#: scalars, so the memo stores values, not cached plans.
-_WINDOW_GATE_MEMO: dict = {}
-on_release(_WINDOW_GATE_MEMO.clear)
+from ..caching import register
 
 
-def hot_window_gate(
-    stats_frame: DataFrame, hot_min_rows: int
-) -> tuple[int, float | None]:
+def hot_window_gate(stats_frame: DataFrame) -> tuple[int, float | None]:
     """Metadata-scale gate for per-key window operators (VERDICT r11
     item 1): does any window-partition key own enough rows that the
     single ``Window.partitionBy(key)`` sort serializes a whale into
@@ -69,22 +40,9 @@ def hot_window_gate(
     ``(max_key_rows, span)`` where ``span`` is max-min of the WHOLE
     frame's non-null ``__t`` (None when no non-null values exist).
     The caller compares ``max_key_rows`` against its measured
-    crossover and derives a bucket width from ``span``.
-
-    Memoized per (session, plan semantics) exactly like the
-    salted_candidates gate — bench repeats and plan sweeps rebuild
-    identical frames many times per session — and under the same
-    contract: sources immutable for the session, else call
-    ``caching.release_caches()`` after mutating.
+    crossover and derives a bucket width from ``span``. The job runs
+    on every call: the verdict is measured on the data as it is now.
     """
-    spark = stats_frame.sparkSession
-    try:
-        memo_key = (id(spark), stats_frame.semanticHash(), hot_min_rows)
-    except Exception:
-        memo_key = None
-    hit = _WINDOW_GATE_MEMO.get(memo_key) if memo_key is not None else None
-    if hit is not None and hit[2] is spark:
-        return hit[0], hit[1]
     row = (
         stats_frame.groupBy("__k")
         .agg(
@@ -103,8 +61,6 @@ def hot_window_gate(
     span = None
     if row is not None and row["t_min"] is not None and row["t_max"] is not None:
         span = float(row["t_max"]) - float(row["t_min"])
-    if memo_key is not None:
-        _WINDOW_GATE_MEMO[memo_key] = (max_rows, span, spark)
     return max_rows, span
 
 
@@ -237,65 +193,35 @@ def salted_candidates(
     else:
         id_cols = [F.col(c) for c in probe_id]
     pair_min = whale_min * whale_min
-    try:
-        memo_key = (
-            id(probe.sparkSession),
-            probe.semanticHash(),
-            build.semanticHash(),
+    # Cache BEFORE the gate action so the scalar's passes also
+    # materialize the per-key stats the whale path consumes twice.
+    # In the no-whale path the cache is dropped on the spot (the
+    # returned plan never references it); in the whale path it is
+    # registered for session-level release_caches.
+    kstats = (
+        build.groupBy(key)
+        .agg(F.count(F.lit(1)).alias("__bn"))
+        .join(
+            probe.groupBy(key).agg(F.count(F.lit(1)).alias("__pn")),
             key,
-            salt,
-            whale_min,
         )
-    except Exception:
-        memo_key = None
-    hit = _GATE_MEMO.get(memo_key) if memo_key is not None else None
-    # id() can be reused after a stopped session's object is collected;
-    # the stored session reference pins the entry to the LIVE session
-    # it was computed in (identity check, loud miss otherwise).
-    if hit is not None and hit[3] is not probe.sparkSession:
-        hit = None
-    if hit is not None:
-        verdict, kstats, row, _sess = hit
-        if verdict == "plain":
-            return probe.join(build, key)
-    else:
-        # Cache BEFORE the gate action so the scalar's passes also
-        # materialize the per-key stats the whale path consumes twice.
-        # In the no-whale path the cache is dropped on the spot (the
-        # returned plan never references it); in the whale path it is
-        # registered for session-level release_caches.
-        kstats = (
-            build.groupBy(key)
-            .agg(F.count(F.lit(1)).alias("__bn"))
-            .join(
-                probe.groupBy(key).agg(F.count(F.lit(1)).alias("__pn")),
-                key,
+        .select(key, "__bn", (F.col("__pn") * F.col("__bn")).alias("__pairs"))
+        .cache()
+    )
+    row = kstats.agg(
+        F.max("__pairs").alias("mp"),
+        F.sum("__bn").alias("build_rows"),
+        F.sum(
+            F.when(F.col("__pairs") >= pair_min, F.col("__bn") * salt).otherwise(
+                F.col("__bn")
             )
-            .select(
-                key, "__bn", (F.col("__pn") * F.col("__bn")).alias("__pairs")
-            )
-            .cache()
-        )
-        row = kstats.agg(
-            F.max("__pairs").alias("mp"),
-            F.sum("__bn").alias("build_rows"),
-            F.sum(
-                F.when(
-                    F.col("__pairs") >= pair_min, F.col("__bn") * salt
-                ).otherwise(F.col("__bn"))
-            ).alias("replica_rows"),
-        ).first()
-        max_pairs = row["mp"] if row is not None else None
-        if max_pairs is None or max_pairs < pair_min:
-            kstats.unpersist()
-            if memo_key is not None:
-                _GATE_MEMO[memo_key] = (
-                    "plain", None, None, probe.sparkSession
-                )
-            return probe.join(build, key)
-        register(kstats)
-        if memo_key is not None:
-            _GATE_MEMO[memo_key] = ("whale", kstats, row, probe.sparkSession)
+        ).alias("replica_rows"),
+    ).first()
+    max_pairs = row["mp"] if row is not None else None
+    if max_pairs is None or max_pairs < pair_min:
+        kstats.unpersist()
+        return probe.join(build, key)
+    register(kstats)
     try:
         nparts = int(
             probe.sparkSession.conf.get("spark.sql.shuffle.partitions")

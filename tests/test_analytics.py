@@ -876,14 +876,12 @@ def test_sessionize_auto_chooser_picks_segmented_on_hot_user(spark, monkeypatch)
         rows, "event_id bigint, user_id bigint, sec bigint"
     ).select("event_id", "user_id", F.timestamp_seconds("sec").alias("ts"))
 
-    caching.release_caches()  # fresh gate memo
     plan_default = analytics.sessionize(df)._jdf.queryExecution().analyzed().toString()
     assert "__off" not in plan_default, (
         "flat-ish corpus below threshold must keep the single-window plan"
     )
 
     monkeypatch.setattr(analytics, "SESSIONIZE_HOT_MIN_ROWS", 1000)
-    caching.release_caches()  # clear memo so the gate re-decides
     auto = analytics.sessionize(df)
     plan_auto = auto._jdf.queryExecution().analyzed().toString()
     assert "__off" in plan_auto, (
@@ -898,8 +896,7 @@ def test_sessionize_auto_chooser_picks_segmented_on_hot_user(spark, monkeypatch)
 
 def test_asof_auto_chooser_picks_segmented_on_hot_key(spark, monkeypatch):
     """VERDICT r11 item 1, as-of flavor: auto-segmentation from the
-    per-key histogram, identity with the single-window plan, and the
-    gate memo answering repeats without new jobs."""
+    per-key histogram and identity with the single-window plan."""
     import random
 
     from data_lake_for_citi_bike_trip_spark import caching
@@ -914,7 +911,6 @@ def test_asof_auto_chooser_picks_segmented_on_hot_key(spark, monkeypatch):
     right = spark.createDataFrame(right_rows, "k int, ts double, v double")
 
     monkeypatch.setattr(asof, "ASOF_HOT_MIN_ROWS", 1000)
-    caching.release_caches()
     auto = asof.asof_join(
         left, right, on="k", left_ts="ts", right_ts="ts", right_cols=["v"]
     )
@@ -927,21 +923,6 @@ def test_asof_auto_chooser_picks_segmented_on_hot_key(spark, monkeypatch):
     )
     diff = auto.exceptAll(plain).count() + plain.exceptAll(auto).count()
     assert diff == 0, f"{diff} mismatched rows"
-
-    # memoized gate: an identical construction submits no new jobs
-    sc = spark.sparkContext
-    sc.setJobGroup("asof_auto_memo", "repeat construction")
-    try:
-        asof.asof_join(
-            left, right, on="k", left_ts="ts", right_ts="ts",
-            right_cols=["v"],
-        )
-    finally:
-        sc.setJobGroup("asof_auto_after", "done")
-    jobs = sc.statusTracker().getJobIdsForGroup("asof_auto_memo")
-    assert list(jobs) == [], (
-        f"memoized gate re-submitted jobs: {list(jobs)}"
-    )
     caching.release_caches()
 
 

@@ -523,7 +523,6 @@ def test_user_windows_auto_segment_identity(spark, monkeypatch):
         "markov_transitions",
         "path_trigrams",
     ):
-        caching.release_caches()
         fn = getattr(bh, op)
         auto = fn(df)
         plain = fn(df, auto_segment=False)
@@ -531,7 +530,6 @@ def test_user_windows_auto_segment_identity(spark, monkeypatch):
         diff = auto.exceptAll(plain).count() + plain.exceptAll(auto).count()
         assert diff == 0, f"{op}: {diff} mismatched rows"
     # and the gate actually fired: the segmented/salted plans differ
-    caching.release_caches()
     assert (
         bh.user_paths(df).semanticHash()
         != bh.user_paths(df, auto_segment=False).semanticHash()
@@ -557,7 +555,6 @@ def test_user_paths_degenerate_span_still_salts(spark, monkeypatch):
         F.timestamp_seconds("sec").alias("ts"), "event_type",
     )
     monkeypatch.setattr(bh, "USER_WINDOW_HOT_MIN_ROWS", 1000)
-    caching.release_caches()
     try:
         assert bh._hot_user_width_us(df) is None, (
             "degenerate span unexpectedly produced a bucket width"
@@ -596,7 +593,6 @@ def test_interval_union_auto_segment_identity(spark, monkeypatch):
     # VERDICT r12 item 2: the gate is BYTE-based — lower the byte bound
     # so the ~2400-row whale (x96 B/row ~ 230 kB estimated) crosses it
     monkeypatch.setattr(intervals, "INTERVAL_UNION_HOT_BYTES", 50_000)
-    caching.release_caches()
     auto = intervals.interval_union_length(df)  # auto_segment default
     plain = intervals.interval_union_length(df, auto_segment=False)
     assert "__off" in auto._jdf.queryExecution().analyzed().toString(), (
@@ -610,7 +606,6 @@ def test_interval_union_auto_segment_identity(spark, monkeypatch):
     # below the bound the auto path must pick the measured-faster
     # plain plan (the r12 soak's wall-clock verdict)
     monkeypatch.setattr(intervals, "INTERVAL_UNION_HOT_BYTES", 1 << 30)
-    caching.release_caches()
     assert "__off" not in (
         intervals.interval_union_length(df)
         ._jdf.queryExecution().analyzed().toString()

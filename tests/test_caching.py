@@ -77,3 +77,30 @@ def test_ann_indexes_live_in_the_registry(spark, sf_dir):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     assert run() == first
     caching.release_caches()
+
+
+def test_gate_scalars_follow_a_rewritten_input(spark, tmp_path):
+    """Gate scalars are measured on every call, never replayed from an
+    earlier plan with the same shape: rewriting a parquet path in place
+    within one session must change ``auto_bucket_bits`` (its width
+    changes operator output) and ``hot_window_gate``'s ``max_rows``."""
+    from data_lake_for_citi_bike_trip_spark.operators import similarity, skew
+
+    vecs = str(tmp_path / "vecs")
+    spark.range(10).withColumnRenamed("id", "vec_id").write.parquet(vecs)
+    assert similarity.auto_bucket_bits(spark.read.parquet(vecs)) == 4
+    spark.range(100_000).withColumnRenamed("id", "vec_id").write.mode(
+        "overwrite"
+    ).parquet(vecs)
+    assert similarity.auto_bucket_bits(spark.read.parquet(vecs)) == 14
+
+    events = str(tmp_path / "events")
+    spark.range(20).select(
+        F.col("id").alias("__k"), F.col("id").cast("double").alias("__t")
+    ).write.parquet(events)
+    assert skew.hot_window_gate(spark.read.parquet(events)) == (1, 19.0)
+    spark.range(20).select(
+        F.when(F.col("id") < 15, F.lit(0)).otherwise(F.col("id")).alias("__k"),
+        F.col("id").cast("double").alias("__t"),
+    ).write.mode("overwrite").parquet(events)
+    assert skew.hot_window_gate(spark.read.parquet(events)) == (15, 19.0)

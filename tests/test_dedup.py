@@ -62,35 +62,24 @@ def test_cosine_topk_is_exact_and_ranked(spark, sf_dir):
     assert all(r.vec_id != r.q_id for r in rows)  # self excluded
 
 
-def test_ivf_topk_recall_vs_brute_force(spark, sf_dir):
+def test_ivf_search_recall_vs_brute_force(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 10)
-    centroids = similarity.train_ivf_centroids(emb, k=8, iters=2)
-    assert centroids.count() == 8
-    ivf = similarity.ivf_topk(emb, queries, centroids, k=10, nprobe=4)
-    bf = similarity.cosine_topk(emb, queries, k=10)
-    ivf_pairs = {(r.q_id, r.vec_id) for r in ivf.collect()}
-    bf_pairs = {(r.q_id, r.vec_id) for r in bf.collect()}
-    recall = len(ivf_pairs & bf_pairs) / len(bf_pairs)
-    # nprobe=4 of 8 clusters scans ~half the corpus; near-random vectors
-    # put ~half the true neighbors in probed lists
-    assert recall >= 0.35, recall
-    # every query produced a full top-k from its probed lists
-    assert ivf.groupBy("q_id").count().where(F.col("count") != 10).count() == 0
-
-
-def test_auto_ivf_nlist_derives_sqrt_n(spark, sf_dir):
-    """k=None derives clamp(round(sqrt(n)), 8, 4096): 500 testdata
-    vectors -> 22 centroids, floor at tiny corpora; the derived index
-    still serves an exhaustive search exactly."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    n = emb.count()
-    want = max(8, min(4096, round(n ** 0.5)))
-    assert similarity.auto_ivf_nlist(emb) == want
-    tiny = emb.where(F.col("vec_id") < 10)
-    assert similarity.auto_ivf_nlist(tiny) == 8  # floor
-    centroids = similarity.train_ivf_centroids(emb, iters=1)
-    assert centroids.count() == want
+    ivf_index = similarity.build_ivf_index(emb, k=8, iters=2)
+    try:
+        assert ivf_index.centroids.count() == 8
+        ivf = similarity.ivf_search(ivf_index, queries, k=10, nprobe=4)
+        bf = similarity.cosine_topk(emb, queries, k=10)
+        ivf_pairs = {(r.q_id, r.vec_id) for r in ivf.collect()}
+        bf_pairs = {(r.q_id, r.vec_id) for r in bf.collect()}
+        recall = len(ivf_pairs & bf_pairs) / len(bf_pairs)
+        # nprobe=4 of 8 clusters scans ~half the corpus; near-random
+        # vectors put ~half the true neighbors in probed lists
+        assert recall >= 0.35, recall
+        # every query produced a full top-k from its probed lists
+        assert ivf.groupBy("q_id").count().where(F.col("count") != 10).count() == 0
+    finally:
+        caching.release_caches()
 
 
 def test_ivf_exhaustive_probe_equals_brute_force(spark, sf_dir):
